@@ -1,11 +1,11 @@
 """Name-preprocessing functions (reference: emm/preprocessing/functions.py:31-96).
 
-Each function is Column -> Column.  All hot-path transforms are native Spark
-expressions (regexp_replace / translate / lower / trim) that stay inside
-whole-stage codegen; the Python boundaries are abbreviation merging (a genuine
-multi-pass regex state machine, reference abbreviation_util.py:90-139) and the
-NFKD transliteration long-tail (ASCII rows short-circuit), both Arrow-batched
-pandas UDFs.
+Each function is Column -> Column.  Every step is a native Spark expression
+(regexp_replace / translate / lower / trim, and array higher-order functions
+for abbreviation merging) except one: the NFKD transliteration long-tail in
+``strip_accents_unicode``, an Arrow-batched pandas UDF (ASCII rows
+short-circuit).  That UDF is the pipelines' only Python boundary; it splits
+the projection around an ``ArrowEvalPython`` node.
 
 Pipelines (reference base_name_preprocessor.py:32-80):
   preprocess_name, preprocess_with_punctuation, preprocess_merge_abbr (default),
@@ -212,8 +212,9 @@ def remove_legal_form(c: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Abbreviation merging — the one genuine Python step (multi-pass state machine,
-# ref abbreviation_util.py:90-99).  Arrow-batched pandas UDF.
+# Abbreviation merging (ref abbreviation_util.py:90-139).  The Python
+# functions are the specification (the aggregation blacklist and the tests
+# use them); the pipeline steps are the same regex as Column expressions.
 # ---------------------------------------------------------------------------
 _ABBR_RUN = re.compile(r"\b(?:[A-Za-z](?:[.]\s*|\s+)){1,}[A-Za-z]\b\.?")
 
@@ -247,22 +248,48 @@ def _merge_legal_abbr_str(s: str) -> str:
     return _ABBR_RUN.sub(_collapse, s)
 
 
-@pandas_udf(StringType())
-def merge_abbreviations_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: _merge_abbr_str(x) if x is not None else None)
+# _ABBR_RUN with Python's Unicode semantics spelled out for java.util.regex:
+# Python's \s is the str.isspace set (Java's is ASCII-only) and its \b is a
+# boundary against [\p{L}\p{N}_]; the run starts and ends on a letter, so
+# \b becomes a lookbehind before the run and a lookahead after it.
+_JAVA_SPACE = (
+    r"[\t\n\x0B\f\r\x1C-\x1F \x85\xA0\u1680\u2000-\u200A"
+    r"\u2028\u2029\u202F\u205F\u3000]"
+)
+_JAVA_ABBR_RUN = (
+    r"(?<![\p{L}\p{N}_])(?:[A-Za-z](?:[.]" + _JAVA_SPACE + "*|" + _JAVA_SPACE
+    + r"+))+[A-Za-z](?![\p{L}\p{N}_])\.?"
+)
 
 
-@pandas_udf(StringType())
-def merge_legal_abbreviations_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: _merge_legal_abbr_str(x) if x is not None else None)
+def _merge_runs(c: Column, collapse) -> Column:
+    """Rewrite every ``_ABBR_RUN`` match of ``c`` with ``collapse(run, merged)``.
+
+    ``regexp_extract_all`` yields the n runs and ``split`` (limit -1) the
+    n + 1 text pieces between them; ``zip_with`` interleaves the pieces with
+    the rewritten runs (null past the last run) and ``array_join`` rejoins
+    them.  Null in, null out."""
+    runs = F.regexp_extract_all(c, F.lit(_JAVA_ABBR_RUN), 0)
+    gaps = F.split(c, _JAVA_ABBR_RUN, -1)
+    merged = F.transform(
+        runs, lambda r: collapse(r, F.regexp_replace(r, "[.]|" + _JAVA_SPACE, ""))
+    )
+    pieces = F.zip_with(gaps, merged, lambda g, m: F.concat(g, F.coalesce(m, F.lit(""))))
+    return F.array_join(pieces, "")
 
 
 def merge_abbreviations(c: Column) -> Column:
-    return merge_abbreviations_udf(c)
+    """JVM twin of :func:`_merge_abbr_str`."""
+    return _merge_runs(c, lambda run, merged: merged)
 
 
 def merge_legal_form_abbreviations(c: Column) -> Column:
-    return merge_legal_abbreviations_udf(c)
+    """JVM twin of :func:`_merge_legal_abbr_str`."""
+    legal = sorted(_LEGAL_ABBR_SET)
+    return _merge_runs(
+        c,
+        lambda run, merged: F.when(F.lower(merged).isin(legal), merged).otherwise(run),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -72,9 +72,12 @@ def aggregate_accounts(
             F.max(F.struct(F.col(score_col).alias("s"), F.col(name_col).alias("n"))).alias("_rep"),
         )
     else:
-        freq = F.coalesce(F.col(freq_col), F.lit(1)).cast("double")
-        # null/0 frequencies contribute nothing but keep the row (ref edge
-        # case: freq may be null or 0, test_spark_vs_pandas.py:70-78)
+        # a missing column or a null frequency counts as 1; a 0 frequency
+        # contributes nothing but keeps the row (ref edge case: freq may be
+        # null or 0, test_spark_vs_pandas.py:70-78)
+        freq = (
+            F.coalesce(F.col(freq_col), F.lit(1)) if freq_col in df.columns else F.lit(1)
+        ).cast("double")
         fs = freq * F.col(score_col)
         per_entity = df.groupBy(*gcols, "gt_entity_id").agg(
             (F.sum(fs) / F.sum(freq)).alias("_agg_score"),

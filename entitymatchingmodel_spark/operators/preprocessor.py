@@ -1,9 +1,11 @@
 """Preprocessor: name -> preprocessed column via a named pipeline.
 
 Reference: emm/preprocessing/spark_preprocessor.py:103-115 (chained withColumn).
-Here the whole pipeline is one nested Column expression, so Catalyst folds it
-into a single projection inside whole-stage codegen (the reference's chained
-UDF steps each break codegen).
+Here the whole pipeline is one nested Column expression.  Every step but one
+is a native expression; the pandas UDF inside ``strip_accents_unicode`` (the
+NFKD fallback) is planned as an ``ArrowEvalPython`` node, so the pipeline runs
+as a native projection, one Arrow round trip to a Python worker, and a second
+native projection.
 """
 
 from __future__ import annotations

@@ -5,11 +5,14 @@ rank via ``rdd.zipWithIndex`` (an extra job coordinated by the driver), then
 one equi-join per window offset.
 
 Spark-first redesign: the global rank is computed with **range partitioning +
-within-partition row_number + broadcast partition offsets** — a fully
-deterministic total order with no single-partition window and no RDD hop.
-This is the standard scalable ranking pattern: ``repartitionByRange`` gives a
-total order across partitions; per-partition row counts (a tiny agg) give each
-partition its starting offset.  At 100 TB the sort is the unavoidable cost;
+within-partition row_number + broadcast partition offsets** — no
+single-partition window and no RDD hop.  ``repartitionByRange`` gives a total
+order across partitions; per-partition row counts (a tiny agg) give each
+partition its starting offset.  The range bounds are sampled, and every
+evaluation of the exchange samples anew (the sampler's seed is tied to the
+evaluation's RDD), so two evaluations may split the keys differently; the
+ranks are exact only because the row numbers and the counts are read from ONE
+persisted evaluation.  At 100 TB the sort is the unavoidable cost;
 everything else stays embarrassingly parallel.
 
 The ±w offset joins are expressed as ONE equi-join after exploding each name
@@ -28,8 +31,16 @@ from pyspark.sql import functions as F
 from entitymatchingmodel_spark import schema as S
 
 
-def global_rank(df: DataFrame, key: str, out: str = "srank", partitions: int | None = None) -> DataFrame:
-    """Dense global 0-based rank of distinct, sorted ``key`` values."""
+def global_rank(
+    df: DataFrame, key: str, out: str = "srank", partitions: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Dense global 0-based rank of distinct, sorted ``key`` values.
+
+    Returns ``(ranks, local)``.  ``local`` (key, partition id, row number in
+    the partition) is persisted: the row numbers and the per-partition counts
+    must come from the same range partitioning, and a second evaluation of
+    the exchange may sample other bounds.  The caller unpersists ``local``
+    once ``ranks`` is no longer needed."""
     keys = df.select(key).distinct()
     n = partitions or keys.sparkSession.sparkContext.defaultParallelism
     ranged = keys.repartitionByRange(n, F.col(key)).withColumn(
@@ -38,14 +49,14 @@ def global_rank(df: DataFrame, key: str, out: str = "srank", partitions: int | N
     # row_number within each range partition (partition-local window: no
     # single-partition bottleneck), then add broadcast per-partition offsets.
     w = Window.partitionBy("_pid").orderBy(key)
-    local = ranged.withColumn("_r", F.row_number().over(w))
+    local = ranged.withColumn("_r", F.row_number().over(w)).persist()
     counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
     woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn("_off", F.coalesce(F.sum("_cnt").over(woff), F.lit(0)))
-    return (
-        local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
-        .select(key, (F.col("_r") + F.col("_off") - 1).cast("long").alias(out))
+    ranks = local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid").select(
+        key, (F.col("_r") + F.col("_off") - 1).cast("long").alias(out)
     )
+    return ranks, local
 
 
 class SNIIndexerModel:
@@ -63,7 +74,7 @@ class SNIIndexerModel:
         self.input_col = input_col
         self.mapping_func = mapping_func
         self.orig_input_col = orig_input_col or input_col
-        self._last_ranks = None  # persisted rank table of the latest transform
+        self._last_ranks = None  # persisted range-partitioned keys of the latest transform
 
     def unpersist(self) -> None:
         """Release cached state (re-fit/teardown hygiene, SURVEY §4 X14)."""
@@ -84,12 +95,13 @@ class SNIIndexerModel:
         union_keys = (
             names.select(key).union(self.gt_keyed.select(key))
         )
-        # ranks feed two joins (gt side + names side): materialize once.
-        # The previous transform's rank table is released here — the cache
-        # would otherwise grow per call on a long-lived model.
+        # The previous transform's cache is released here, before the new
+        # one is persisted — it would otherwise grow per call on a
+        # long-lived model.  ranks feed two joins (gt side + names side);
+        # both read the one persisted range partitioning.
         if self._last_ranks is not None:
             self._last_ranks.unpersist()
-        ranks = self._last_ranks = global_rank(union_keys, key).persist()
+        ranks, self._last_ranks = global_rank(union_keys, key)
         gt_r = self.gt_keyed.join(ranks, key).select("gt_uid", F.col("srank").alias("gt_rank"))
         nm_r = names.select(S.UID, key).join(ranks, key).select(S.UID, "srank")
         # Explode each name rank into its neighbour positions -> one equi-join.

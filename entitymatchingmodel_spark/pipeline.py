@@ -159,13 +159,22 @@ class SparkEntityMatching:
         # each adding a score column nm_score_<name>; the primary
         # supervised_model_ drives best_rank/best_match.
         self.extra_supervised_models_: dict[str, Any] = {}
+        # preprocessed names of the latest transform (one rotating cache)
+        self._names_cache: DataFrame | None = None
+
+    def _release_names(self) -> None:
+        if self._names_cache is not None:
+            self._names_cache.unpersist()
+            self._names_cache = None
 
     def unpersist(self) -> None:
         """Release all cached fitted state (GT table, indexer indexes,
-        broadcasts).  Called automatically at the top of :meth:`fit` so
-        re-fitting never leaks executor memory — the reference documents the
+        broadcasts) and the latest transform's preprocessed names.  Called
+        automatically at the top of :meth:`fit` so re-fitting never leaks
+        executor memory — the reference documents the
         leak and suggests restarting the session (spark_entity_matching.py:
         682-691, SURVEY §4 X14); here the handles are managed."""
+        self._release_names()
         if self.gt_ is not None:
             self.gt_.unpersist()
             self.gt_ = None
@@ -231,6 +240,15 @@ class SparkEntityMatching:
 
     # ---------------------------------------------------------- transform
     def transform(self, names_df) -> DataFrame:
+        """Match ``names_df`` against the fitted GT.  Lazy: runs no Spark job
+        (unless ``auto_repartition`` is set).
+
+        The preprocessed names feed every indexer and ``attach_names``, so
+        they are persisted once and computed by the first action on the
+        result.  That cache lives until the next :meth:`transform` (or
+        :meth:`fit`) or :meth:`unpersist`; a result executed after its cache
+        was released recomputes the names from lineage.
+        """
         if not self.indexer_models_:
             raise RuntimeError("transform() called before fit(); fit a ground-truth table first")
         names_df = self._promote(names_df)
@@ -260,7 +278,16 @@ class SparkEntityMatching:
         names = S.with_uid(names)
         if self.p.get("auto_repartition", False):
             names = self._auto_repartition(names)
-        names = self.preprocessor.transform(names)
+        # Release the previous names frame BEFORE persisting this one: the
+        # CacheManager matches plans structurally, so for an identical batch
+        # persist-then-unpersist would drop the shared entry.  The cache is
+        # hash-partitioned by uid, so the indexers' per-uid aggregates and
+        # windows and attach_names' join read it without another exchange
+        # (an unpartitioned cache costs each of them a shuffle).
+        self._release_names()
+        names = self._names_cache = (
+            self.preprocessor.transform(names).repartition(S.UID).persist()
+        )
         per_indexer = {
             iname: model.transform(names)
             for iname, model in self.indexer_models_.items()

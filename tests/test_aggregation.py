@@ -150,3 +150,23 @@ def test_rep_name_tie_breaks_desc(spark):
     )
     out = aggregate_accounts(df, method="mean_score").collect()
     assert out[0]["rep_name"] == "zzz"  # max(struct) -> name DESC on ties
+
+
+def test_pipeline_aggregation_without_frequency_column(spark):
+    """Names with an account but no frequency column aggregate with every
+    name counting once, as a null frequency does."""
+    from entitymatchingmodel_spark import SparkEntityMatching
+
+    gt = spark.createDataFrame(
+        [("Alpha Bank", 1), ("Beta Shipping", 2), ("Gamma Foods", 3)], "name string, id long"
+    )
+    names = spark.createDataFrame(
+        [("Alpha Bank", 10, "a1"), ("Alpha Bnk", 11, "a1"), ("Beta Shiping", 12, "a2")],
+        "name string, id long, account string",
+    )
+    em = SparkEntityMatching(aggregation_layer=True).fit(gt)
+    try:
+        out = {r["account"]: r["gt_entity_id"] for r in em.transform(names).collect()}
+    finally:
+        em.unpersist()
+    assert out == {"a1": 1, "a2": 2}
