@@ -1610,8 +1610,7 @@ def q_vocab_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully distributed path: the tier table never leaves the cluster —
     ``fit_tiers`` keeps it as a DataFrame and the feature step broadcast-
-    joins it (the literal-array ``Vocabulary.fit`` twin stays for small
-    vocabularies)."""
+    joins it."""
     from entitymatchingmodel_spark.operators.features import (
         VOCAB_FEATURES,
         Vocabulary,

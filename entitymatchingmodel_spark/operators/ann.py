@@ -156,20 +156,16 @@ def ivf_topk(
     side is bounded at ``nlist`` rows, so the "nested loop" is one corpus
     scan with nlist dot products per row, not a quadratic pair join
     (tools/plan_audit.py whitelists it by name).
-    """
-    from entitymatchingmodel_spark.operators.veckernel import kernel_enabled
 
+    Not fully lazy: the call itself runs one Spark job, which
+    ``localCheckpoint``-s the ``nlist``-row centroid table so the corpus
+    assignment and the query probe read it without re-running the
+    corpus-wide sample.
+    """
     cents = _build_centroids(corpus, id_col, vec_col, nlist, seed)
-    # one shared centroid collect for both the corpus assignment and the
-    # query probe (the kernel shape's bounded driver materialization);
-    # the legacy shape instead re-derives the cents subtree per consumer
-    cent_rows = _collect_cents(cents) if kernel_enabled() else None
-    c_assigned = _assign_corpus(
-        corpus, cents, id_col, vec_col, score_decimals, cent_rows=cent_rows
-    )
+    c_assigned = _assign_corpus(corpus, cents, id_col, vec_col, score_decimals)
     return _probe_search(
-        queries, cents, c_assigned, id_col, vec_col, k, nprobe, score_decimals,
-        cent_rows=cent_rows,
+        queries, cents, c_assigned, id_col, vec_col, k, nprobe, score_decimals
     )
 
 
@@ -177,53 +173,13 @@ def _l2_normalize(df: DataFrame, vcol: str) -> DataFrame:
     """Stage unit vectors in their own projection: norms are computed
     once per row, and every downstream cosine is a plain dot product
     (a nested norm inside the per-pair expression re-evaluates it for
-    every (row, centroid) pair).
-
-    Default shape stages the NORM through the Arrow kernel twin (r12,
-    guide §4.2): inlined, the interpreted ``transform`` lambda re-evaluates
-    the O(dim) norm subexpression PER ELEMENT (O(dim^2) per row); the
-    kernel computes the same fold once per row, bit-identically (see the
-    veckernel docstring), and the ``when(norm > 0)`` gate plus the
-    per-element division stay in Spark so every edge case (NULL, zero
-    norm, NaN) follows the expression exactly.  ``EMM_VEC_KERNEL=0``
-    restores the expression twin."""
-    from entitymatchingmodel_spark.operators.veckernel import (
-        kernel_enabled,
-        norm_kernel,
-    )
-
-    if kernel_enabled():
-        nc = norm_kernel(F.col(vcol))
-        cols = df.columns
-        staged = df.withColumn("_veck_n", nc)
-        unit = F.when(
-            F.col("_veck_n") > 0,
-            F.transform(
-                F.col(vcol), lambda x: x.cast("double") / F.col("_veck_n")
-            ),
-        )
-        return staged.withColumn(vcol, unit).select(*cols)
+    every (row, centroid) pair).  The ``when(norm > 0)`` gate maps NULL
+    and zero-norm vectors to NULL; NaN elements propagate."""
     n = _norm(F.col(vcol))
     unit = F.when(
         n > 0, F.transform(F.col(vcol), lambda x: x.cast("double") / n)
     )
     return df.withColumn(vcol, unit)
-
-
-def _dot_col(a: Column, b: Column) -> Column:
-    """Plain-column dot product: the Arrow kernel twin by default, the
-    interpreted ``zip_with``/``aggregate`` expression under
-    ``EMM_VEC_KERNEL=0`` — bit-identical raw doubles either way (rounding
-    always stays Spark-side in the callers).  Only for plain column
-    contexts; inside higher-order lambdas (the streaming literal-centroid
-    path) use :func:`_dot`, since UDFs cannot reference lambda
-    variables."""
-    from entitymatchingmodel_spark.operators.veckernel import (
-        dot_kernel,
-        kernel_enabled,
-    )
-
-    return dot_kernel(a, b) if kernel_enabled() else _dot(a, b)
 
 
 def _maybe_round(c: Column, score_decimals: int | None) -> Column:
@@ -255,14 +211,6 @@ def _build_centroids(
     ).localCheckpoint()
 
 
-def _collect_cents(cents: DataFrame) -> list:
-    """Driver-collect the bounded centroid table (``nlist`` <= 64 rows by
-    construction — the same bounded materialization the streaming
-    literal-centroid router has always done), ordered by ``cent_id`` so a
-    score array index maps to a deterministic centroid id."""
-    return cents.select("cent_id", "_cent").orderBy("cent_id").collect()
-
-
 def _nearest_centroids(
     df: DataFrame,
     cents: DataFrame,
@@ -272,65 +220,10 @@ def _nearest_centroids(
     out: str,
     score_decimals: int | None,
     score_col: str | None = None,
-    cent_rows: list | None = None,
 ) -> DataFrame:
-    """Top-``n`` centroids per row under (score desc, cent_id asc).
-
-    Default shape (r12, guide §2.4/§4.2): MAP-ONLY — one Arrow kernel
-    scores every centroid per row (the centroid table is bounded and
-    driver-collected, ``cent_rows`` shares one collect across call
-    sites), rounding stays Spark-side (``transform`` + ``F.round``), and
-    the top-n is an ``array_sort`` comparator + ``slice`` + ``explode``
-    per row.  This removes the legacy shape's nlist-way crossJoin
-    fan-out AND the window's Exchange of (rows x nlist) vector payloads
-    — the corpus is never shuffled for an assignment.  The comparator
-    reproduces the window's total order exactly: score desc with
-    Spark's NaN-greatest semantics, NULL scores last, ties cent_id asc.
-
-    ``EMM_VEC_KERNEL=0`` restores the legacy crossJoin + window shape.
-    """
-    from entitymatchingmodel_spark.operators.veckernel import (
-        kernel_enabled,
-        make_cents_dots,
-    )
-
-    if kernel_enabled():
-        rows = cent_rows if cent_rows is not None else _collect_cents(cents)
-        if not rows:
-            # legacy shape: crossJoin with an empty centroid table = no rows
-            extra = (
-                [F.lit(None).cast("double").alias(score_col)]
-                if score_col is not None
-                else []
-            )
-            return df.where(F.lit(False)).select(
-                *df.columns, F.lit(None).cast("int").alias(out), *extra
-            )
-        kern = make_cents_dots([r["_cent"] for r in rows])
-        arr = kern(F.col(vcol))
-        if score_decimals is not None:
-            arr = F.transform(arr, lambda s: F.round(s, score_decimals))
-        id_arr = F.array(*[F.lit(int(r["cent_id"])) for r in rows])
-        pairs = F.zip_with(
-            arr, id_arr, lambda s, c: F.struct(s.alias("s"), c.alias("c"))
-        )
-
-        def cmp(left, right):
-            ls, rs = left["s"], right["s"]
-            return (
-                F.when(ls.isNull() & rs.isNull(), left["c"] - right["c"])
-                .when(ls.isNull(), F.lit(1))   # NULLS LAST, like desc()
-                .when(rs.isNull(), F.lit(-1))
-                .when(ls > rs, F.lit(-1))      # NaN-greatest, like Spark sort
-                .when(ls < rs, F.lit(1))
-                .otherwise(left["c"] - right["c"])
-            )
-
-        top = F.slice(F.array_sort(pairs, cmp), 1, n)
-        sel = df.select(*df.columns, F.explode(top).alias("_bp"))
-        extra = [F.col("_bp")["s"].alias(score_col)] if score_col is not None else []
-        return sel.select(*df.columns, F.col("_bp")["c"].alias(out), *extra)
-
+    """Top-``n`` centroids per row under (score desc, cent_id asc): a
+    crossJoin against the broadcast ``nlist``-row centroid table, then a
+    row_number window per row id."""
     scored = df.crossJoin(F.broadcast(cents)).withColumn(
         "_cs", _maybe_round(_dot(F.col(vcol), F.col("_cent")), score_decimals)
     )
@@ -351,7 +244,6 @@ def _assign_corpus(
     id_col: str,
     vec_col: str,
     score_decimals: int | None,
-    cent_rows: list | None = None,
 ) -> DataFrame:
     """(bucket, nn_id, _cv): every corpus vector unit-normalized and
     assigned to its nearest centroid bucket.  Zero-norm vectors (NULL
@@ -361,10 +253,7 @@ def _assign_corpus(
     c = _l2_normalize(
         corpus.select(F.col(id_col).alias("nn_id"), F.col(vec_col).alias("_cv")), "_cv"
     ).filter(F.col("_cv").isNotNull())
-    return _nearest_centroids(
-        c, cents, "nn_id", "_cv", 1, "bucket", score_decimals,
-        cent_rows=cent_rows,
-    )
+    return _nearest_centroids(c, cents, "nn_id", "_cv", 1, "bucket", score_decimals)
 
 
 def _probe_search(
@@ -376,19 +265,17 @@ def _probe_search(
     k: int,
     nprobe: int,
     score_decimals: int | None,
-    cent_rows: list | None = None,
 ) -> DataFrame:
     q = _l2_normalize(
         queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")), "_qv"
     ).filter(F.col("_qv").isNotNull())  # zero-norm query: cosine undefined
     q_probed = _nearest_centroids(
-        q, cents, "qid", "_qv", nprobe, "bucket", score_decimals,
-        cent_rows=cent_rows,
+        q, cents, "qid", "_qv", nprobe, "bucket", score_decimals
     )
     scored = q_probed.join(c_assigned, "bucket").select(
         "qid",
         "nn_id",
-        _maybe_round(_dot_col(F.col("_qv"), F.col("_cv")), score_decimals).alias("score"),
+        _maybe_round(_dot(F.col("_qv"), F.col("_cv")), score_decimals).alias("score"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nn_id"))
     return (
@@ -458,7 +345,12 @@ class IVFIndex:
         supplied table's row count with them; passing BOTH cross-checks
         the two (a kmeans_fit(k=32) table under a stale nlist=64 would
         otherwise record a wrong nlist in meta.json and mis-size the
-        bucket-partitioned save — round-7 review finding)."""
+        bucket-partitioned save — round-7 review finding).
+
+        Building runs Spark jobs before any search: without
+        ``centroids``, one job ``localCheckpoint``-s the sampled centroid
+        table (as in :func:`ivf_topk`); with them, one bounded ``count``
+        checks the table's size."""
         if centroids is None:
             nlist = 64 if nlist is None else nlist
             cents = _build_centroids(corpus, id_col, vec_col, nlist, seed)

@@ -515,65 +515,19 @@ def _vocab_tokens(c: Column) -> Column:
 
 
 class Vocabulary:
-    """Fitted word-frequency tiers (ref features_vocabulary.py:30-99).
+    """Word-frequency tiers (ref features_vocabulary.py:30-99).
 
     very_common: tokens appearing in >= very_common_min_df of distinct names;
     common: >= common_min_df, minus very_common (disjoint tiers, as the
-    reference subtracts).  Token document-frequency is computed distributed
-    (explode + groupBy); only the resulting tier lists (small by
-    construction — bounded by 1/min_df) are collected.
+    reference subtracts).  :meth:`fit_tiers` computes them distributed as
+    a ``(token, tier)`` DataFrame; an instance holds them as literal token
+    lists for :func:`vocabulary_features` (saved supervised models load
+    through it).
     """
 
     def __init__(self, very_common: list[str], common: list[str]):
         self.very_common = sorted(very_common)
         self.common = sorted(common)
-
-    @classmethod
-    def fit(
-        cls,
-        df: DataFrame,
-        columns: list[str],
-        very_common_min_df: float = 0.01,
-        common_min_df: float = 0.0001,
-    ) -> "Vocabulary":
-        """DEPRECATED — use :meth:`fit_tiers`.
-
-        This path COLLECTS the tier token lists to the driver (bounded by
-        1/min_df, but still a driver materialization a small
-        ``common_min_df`` can blow up to millions of tokens) and inlines
-        them as literal arrays.  :meth:`fit_tiers` keeps the tiers as a
-        DataFrame and :func:`vocabulary_features_joined` broadcast-joins
-        it — the 100 TB path the supervised fit uses.  Kept for parity
-        tests and small interactive vocabularies only.
-        """
-        import warnings
-
-        warnings.warn(
-            "Vocabulary.fit collects tier token lists to the driver; use "
-            "Vocabulary.fit_tiers + vocabulary_features_joined (the "
-            "no-collect path) instead",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        if common_min_df >= very_common_min_df:
-            raise ValueError("common_min_df must be smaller than very_common_min_df")
-        names = None
-        for c in columns:
-            part = df.select(F.col(c).alias("_n"))
-            names = part if names is None else names.unionAll(part)
-        names = names.filter(F.col("_n").isNotNull()).distinct()
-        n_docs = names.count()
-        tok_df = (
-            names.select(F.explode_outer(_vocab_tokens(F.col("_n"))).alias("token"))
-            .filter(F.col("token").isNotNull())
-            .groupBy("token")
-            .agg(F.count("*").alias("df"))
-        )
-        rows = tok_df.filter(F.col("df") >= common_min_df * n_docs).collect()
-        very = [r["token"] for r in rows if r["df"] >= very_common_min_df * n_docs]
-        vs = set(very)
-        common = [r["token"] for r in rows if r["token"] not in vs]
-        return cls(very, common)
 
     @classmethod
     def fit_tiers(
@@ -583,10 +537,9 @@ class Vocabulary:
         very_common_min_df: float = 0.01,
         common_min_df: float = 0.0001,
     ) -> DataFrame:
-        """Distributed twin of :meth:`fit`: returns the tier table as a
-        DataFrame ``(token, tier)`` with tier 2 = very_common, 1 = common —
-        NO token list is ever collected to the driver (only the scalar
-        distinct-name count).  Feed it to
+        """The tier table as a DataFrame ``(token, tier)`` with tier 2 =
+        very_common, 1 = common — NO token list is ever collected to the
+        driver (only the scalar distinct-name count).  Feed it to
         :func:`vocabulary_features_joined`, which broadcast-joins it
         instead of inlining literal arrays — the 100 TB path when a small
         ``common_min_df`` makes the tier lists millions of tokens.

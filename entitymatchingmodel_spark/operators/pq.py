@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from entitymatchingmodel_spark.operators.ann import _dot, _dot_col
+from entitymatchingmodel_spark.operators.ann import _dot
 
 MICRO = 1_000_000
 
@@ -124,66 +124,13 @@ def _assign_codes(
     sv: DataFrame, codebooks: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """Nearest-code assignment with the min-(distance, code) tie-break
-    both engines agree on (distance asc, code asc, NULL distance first).
-
-    Default shape (r12, guide §2.4/§4.2): MAP-ONLY — the bounded
-    ``m * k``-row codebook is driver-collected (the ``PQModel.save``
-    model-artifact class), one Arrow kernel computes each row's raw
-    squared L2 against every code of its subspace, rounding stays
-    Spark-side (``transform`` + ``F.round(_, 9)``), and the argmin is an
-    ``array_min`` over (distance, code) structs — same ordering as the
-    legacy ``F.min`` aggregate.  This removes the legacy shape's k-way
-    broadcast fan-out AND the ``groupBy(_id, sub_id)`` Exchange of
-    corpus-sized rows: encode never shuffles.  ``EMM_VEC_KERNEL=0``
-    restores the legacy join + groupBy shape.
+    both engines agree on (distance asc, code asc, NULL distance first):
+    a broadcast join against the ``m * k``-row codebook, then one
+    ``groupBy(_id, sub_id)`` minimum over (distance, code) structs.
 
     ``carry`` columns (functionally dependent on the id, e.g. an IVF
-    bucket) ride through the projection (legacy: the group-by key).
+    bucket) ride through as extra group-by keys.
     """
-    from entitymatchingmodel_spark.operators.veckernel import (
-        kernel_enabled,
-        make_sub_l2sq,
-    )
-
-    if kernel_enabled():
-        rows = codebooks.select("sub_id", "code", "centroid").collect()
-        if not rows:
-            return sv.where(F.lit(False)).select(
-                "_id", "sub_id", *carry, F.lit(None).cast("int").alias("code")
-            )
-        by_sub: dict = {}
-        for r in rows:
-            by_sub.setdefault(int(r["sub_id"]), []).append(
-                (int(r["code"]), r["centroid"])
-            )
-        for s in by_sub:
-            by_sub[s].sort(key=lambda t: t[0])
-        kern = make_sub_l2sq(by_sub)
-        arr = F.transform(
-            kern(F.col("sub_id"), F.col("_sv")), lambda d: F.round(d, 9)
-        )
-        codes_arr = None
-        for s, pairs in sorted(by_sub.items()):
-            lit_arr = F.array(*[F.lit(c) for c, _ in pairs])
-            cond = F.col("sub_id") == s
-            codes_arr = (
-                F.when(cond, lit_arr)
-                if codes_arr is None
-                else codes_arr.when(cond, lit_arr)
-            )
-        best = F.array_min(
-            F.zip_with(
-                arr, codes_arr,
-                lambda d, c: F.struct(d.alias("_d"), c.alias("code")),
-            )
-        )
-        return (
-            sv.select("_id", "sub_id", *carry, best["code"].alias("code"))
-            # NULL code = subspace absent from the codebook: the legacy
-            # inner join dropped those rows
-            .filter(F.col("code").isNotNull())
-        )
-
     cb = F.broadcast(codebooks.select("sub_id", "code", "centroid"))
     return (
         sv.join(cb, "sub_id")
@@ -434,7 +381,7 @@ def pq_topk(
             "_qid",
             "sub_id",
             "code",
-            F.round(_dot_col(F.col("_sv"), F.col("centroid")) * MICRO)
+            F.round(_dot(F.col("_sv"), F.col("centroid")) * MICRO)
             .cast("long")
             .alias("_c_micro"),
         )
@@ -543,6 +490,11 @@ def ivf_pq_topk(
     the probed fraction), one broadcast ADC-table join, ONE (qid, id)
     micro-unit rollup, and the top-k window.  The ADC table is bounded by
     the guarded query batch — the same posture as :func:`pq_topk`.
+
+    Not lazy: besides the bounded guard probes, the call runs one job
+    that ``localCheckpoint``-s the ``nlist``-row centroid table (as in
+    :func:`ann.ivf_topk`), and without ``codebooks`` the :func:`pq_fit`
+    Lloyd iterations.
     """
     from entitymatchingmodel_spark.operators.ann import (
         _assign_corpus,
@@ -630,16 +582,8 @@ def ivf_pq_topk(
                 "between fit and transform)"
             )
 
-    from entitymatchingmodel_spark.operators.ann import _collect_cents
-    from entitymatchingmodel_spark.operators.veckernel import kernel_enabled
-
     cents = _build_centroids(corpus, id_col, vec_col, nlist, seed)
-    # one shared centroid collect for the corpus assignment and the query
-    # probe (the ann.ivf_topk posture)
-    cent_rows = _collect_cents(cents) if kernel_enabled() else None
-    assigned = _assign_corpus(
-        corpus, cents, id_col, vec_col, score_decimals, cent_rows=cent_rows
-    )
+    assigned = _assign_corpus(corpus, cents, id_col, vec_col, score_decimals)
     if codebooks is None:
         # the fit scans `assigned` n_iter + 2 times (geometry probe, init,
         # one assignment per iteration); cache the corpus-wide centroid
@@ -662,8 +606,7 @@ def ivf_pq_topk(
         "_qv",
     ).filter(F.col("_qv").isNotNull())
     probed = _nearest_centroids(
-        qun, cents, "qid", "_qv", nprobe, "bucket", score_decimals,
-        cent_rows=cent_rows,
+        qun, cents, "qid", "_qv", nprobe, "bucket", score_decimals
     )
     qsv = _subvecs(qun, "qid", "_qv", m, d_sub).withColumnRenamed("_id", "_qid")
     dt = F.broadcast(
@@ -671,7 +614,7 @@ def ivf_pq_topk(
             "_qid",
             "sub_id",
             "code",
-            F.round(_dot_col(F.col("_sv"), F.col("centroid")) * MICRO)
+            F.round(_dot(F.col("_sv"), F.col("centroid")) * MICRO)
             .cast("long")
             .alias("_c_micro"),
         )
@@ -898,7 +841,7 @@ def refine_topk(
         .select(
             "_rq",
             "_rc",
-            F.round(_dot_col(F.col("_qv"), F.col("_cv")) * MICRO)
+            F.round(_dot(F.col("_qv"), F.col("_cv")) * MICRO)
             .cast("long")
             .alias("_e_micro"),
         )

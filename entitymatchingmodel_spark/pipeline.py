@@ -148,9 +148,6 @@ class SparkEntityMatching:
         self.with_legal_entity_forms_match = p.get(
             "with_legal_entity_forms_match", False
         )
-        # Target rows/partition for input sizing (ref parameters.py:48,
-        # spark_utils.py:63-76 auto_repartitioning; SURVEY §4 X7).
-        self.partition_size = p.get("partition_size", 5000)
         # fitted state
         self.gt_: DataFrame | None = None
         self.indexer_models_: dict[str, Any] = {}
@@ -195,21 +192,6 @@ class SparkEntityMatching:
             return SparkSession.active().createDataFrame(df)
         raise TypeError(f"expected Spark or pandas DataFrame, got {type(df)!r}")
 
-    def _auto_repartition(self, df: DataFrame) -> DataFrame:
-        """Size partitions to ~partition_size rows (ref spark_utils.py:63-76).
-
-        Uses a cheap countApprox-style estimate from the first action; here
-        rdd.countApprox is avoided (extra job) — instead rely on the
-        current partition count and only repartition when way off."""
-        if not self.partition_size or df.isStreaming:
-            return df
-        n = df.rdd.countApprox(timeout=1000, confidence=0.9)
-        target = max(1, int(n / self.partition_size))
-        current = df.rdd.getNumPartitions()
-        if target > current * 2 or target < current // 2:
-            return df.repartition(target)
-        return df
-
     # ---------------------------------------------------------------- fit
     def fit(self, gt_df) -> "SparkEntityMatching":
         self.unpersist()  # re-fit must not leak prior state (SURVEY §4 X14)
@@ -223,8 +205,6 @@ class SparkEntityMatching:
             carry_on_cols=[c for c in self.carry_on_cols if c in gt_df.columns],
         )
         gt = S.with_uid(gt)
-        if self.p.get("auto_repartition", False):
-            gt = self._auto_repartition(gt)
         gt = self.preprocessor.transform(gt)
         gt = S.prefix_gt(gt)  # uid->gt_uid, name->gt_name, ...
         gt = gt.withColumnRenamed(S.GT_PREFIX + S.PREPROCESSED, "gt_preprocessed")
@@ -240,8 +220,7 @@ class SparkEntityMatching:
 
     # ---------------------------------------------------------- transform
     def transform(self, names_df) -> DataFrame:
-        """Match ``names_df`` against the fitted GT.  Lazy: runs no Spark job
-        (unless ``auto_repartition`` is set).
+        """Match ``names_df`` against the fitted GT.  Lazy: runs no Spark job.
 
         The preprocessed names feed every indexer and ``attach_names``, so
         they are persisted once and computed by the first action on the
@@ -276,8 +255,6 @@ class SparkEntityMatching:
             carry_on_cols=[c for c in self.carry_on_cols if c in names_df.columns],
         )
         names = S.with_uid(names)
-        if self.p.get("auto_repartition", False):
-            names = self._auto_repartition(names)
         # Release the previous names frame BEFORE persisting this one: the
         # CacheManager matches plans structurally, so for an identical batch
         # persist-then-unpersist would drop the shared entry.  The cache is

@@ -238,3 +238,56 @@ def test_ivf_drops_zero_norm_vectors(spark):
         assert all(r["score"] is not None for r in got)
     finally:
         idx.unpersist()
+
+
+def _unit_twin(v):
+    """Plain-Python ``_l2_normalize``: the same left fold for the norm,
+    double division, and Spark's ordering, under which NaN > 0."""
+    if v is None:
+        return None
+    acc = 0.0
+    for x in v:
+        acc += x * x
+    n = math.sqrt(acc)
+    if not (n > 0 or math.isnan(n)):
+        return None
+    return [x / n for x in v]
+
+
+@pytest.mark.parametrize("elem_type", ["double", "float"])
+def test_l2_normalize_edge_cases_match_python_twin(spark, elem_type):
+    """NULL -> NULL, zero norm (incl. empty) -> NULL, a NaN element makes
+    every output element NaN, and float32 elements are cast to double
+    before the division (the twin divides the read-back float32 values in
+    double precision, so a float32 division would not compare equal)."""
+    import random
+
+    from entitymatchingmodel_spark.operators.ann import _l2_normalize
+
+    rng = random.Random(20260818)
+    rows = [
+        (0, None),
+        (1, [0.0, 0.0, 0.0]),
+        (2, []),
+        (3, [1.0, float("nan"), 2.0]),
+        (4, [3.0, 4.0]),
+    ]
+    rows += [
+        (i, [rng.uniform(-3.0, 3.0) for _ in range(rng.choice([1, 2, 8, 64]))])
+        for i in range(5, 45)
+    ]
+    df = spark.createDataFrame(rows, f"i long, v array<{elem_type}>")
+    inputs = {r["i"]: r["v"] for r in df.collect()}
+    got = {r["i"]: r["v"] for r in _l2_normalize(df, "v").collect()}
+
+    assert got.keys() == inputs.keys()
+    assert got[0] is None and got[1] is None and got[2] is None
+    assert all(math.isnan(x) for x in got[3])
+    for i, v in inputs.items():
+        want = _unit_twin(v)
+        if want is None:
+            assert got[i] is None, (i, got[i])
+            continue
+        assert len(got[i]) == len(want), i
+        for x, y in zip(got[i], want):
+            assert x == y or (math.isnan(x) and math.isnan(y)), (i, got[i], want)

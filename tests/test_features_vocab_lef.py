@@ -11,16 +11,25 @@ from entitymatchingmodel_spark.operators.features import (
 )
 
 
+def _literal_vocab(tiers):
+    """The literal-array Vocabulary holding a fit_tiers table's tiers."""
+    rows = tiers.collect()
+    return Vocabulary(
+        very_common=[r["token"] for r in rows if r["tier"] == 2],
+        common=[r["token"] for r in rows if r["tier"] == 1],
+    )
+
+
 def test_vocabulary_fit_tiers(spark):
-    # 'alpha' in 4/4 names (very common at 0.5), 'beta' in 2/4 (common at 0.25)
+    # 'alpha' in 4/4 names (very common at 0.9), 'beta' in 2/4 (common at 0.4)
     df = spark.createDataFrame(
         [("alpha beta one",), ("alpha beta two",), ("alpha three",), ("alpha four",)],
         "preprocessed string",
     )
-    # the collecting fit is deprecated (fit_tiers is the production path);
-    # it must say so loudly while still computing the right tiers
-    with pytest.warns(DeprecationWarning, match="fit_tiers"):
-        v = Vocabulary.fit(df, ["preprocessed"], very_common_min_df=0.9, common_min_df=0.4)
+    tiers = Vocabulary.fit_tiers(
+        df, ["preprocessed"], very_common_min_df=0.9, common_min_df=0.4
+    )
+    v = _literal_vocab(tiers)
     assert v.very_common == ["alpha"]
     assert v.common == ["beta"]
 
@@ -135,9 +144,9 @@ def test_vocabulary_joined_matches_literal_path(spark):
          (3, 30, "", "alpha four")],
         "uid long, gt_uid long, preprocessed string, gt_preprocessed string",
     )
-    v = Vocabulary.fit(names, ["preprocessed"], very_common_min_df=0.9, common_min_df=0.4)
     tiers = Vocabulary.fit_tiers(names, ["preprocessed"],
                                  very_common_min_df=0.9, common_min_df=0.4)
+    v = _literal_vocab(tiers)
     assert {(r["token"], r["tier"]) for r in tiers.collect()} == {("alpha", 2), ("beta", 1)}
 
     lit_rows = {
@@ -211,9 +220,9 @@ def test_vocabulary_features_joined_null_safe_matches_literal(spark):
         [("alpha beta one",), ("alpha beta two",), ("alpha three",), ("alpha four",)],
         "preprocessed string",
     )
-    v = Vocabulary.fit(names, ["preprocessed"], very_common_min_df=0.9, common_min_df=0.4)
     tiers = Vocabulary.fit_tiers(names, ["preprocessed"],
                                  very_common_min_df=0.9, common_min_df=0.4)
+    v = _literal_vocab(tiers)
 
     lit_rows = {r["uid"]: r for r in vocabulary_features(pairs, v).collect()}
     join_rows = {r["uid"]: r
@@ -258,8 +267,9 @@ def test_supervised_fit_uses_no_collect_tiers(spark):
         out = model.transform(cands, return_sm_features=True)
         got = {(r["uid"], r["gt_uid"]): r for r in out.collect()}
 
-        v = Vocabulary.fit(cands, ["preprocessed", "gt_preprocessed"],
-                           very_common_min_df=0.5, common_min_df=0.01)
+        v = _literal_vocab(Vocabulary.fit_tiers(
+            cands, ["preprocessed", "gt_preprocessed"],
+            very_common_min_df=0.5, common_min_df=0.01))
         want = {(r["uid"], r["gt_uid"]): r
                 for r in vocabulary_features(cands, v).collect()}
         from entitymatchingmodel_spark.operators.features import VOCAB_FEATURES

@@ -1,7 +1,5 @@
 """Structured Streaming transform path."""
 
-import time
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,33 +21,40 @@ def fitted(spark):
     return em.fit(gt)
 
 
+_POOL = ["apple", "microsof corp", "netflx nv", "amazonn ltd"]
+
+
 def _name_stream(spark):
     """rate source -> cycling company-name stream."""
-    pool = ["apple", "microsof corp", "netflx nv", "amazonn ltd"]
-    arr = F.array(*[F.lit(x) for x in pool])
+    arr = F.array(*[F.lit(x) for x in _POOL])
     return (
         spark.readStream.format("rate").option("rowsPerSecond", 20).load()
         .select(
             F.col("value").alias("id"),
-            F.element_at(arr, (F.col("value") % len(pool) + 1).cast("int")).alias("name"),
+            F.element_at(arr, (F.col("value") % len(_POOL) + 1).cast("int")).alias("name"),
         )
     )
 
 
 def test_foreach_batch_full_pipeline(spark, fitted, tmp_path):
+    # a bounded file stream: processAllAvailable() returns once the four
+    # pool names are processed (an unbounded rate source never drains
+    # while a micro-batch takes longer than its one-second offset step)
+    src = str(tmp_path / "names")
+    spark.createDataFrame(
+        list(enumerate(_POOL)), "id long, name string"
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("id long, name string").parquet(src)
     got = []
 
     def sink(df, batch_id):
         got.extend(df.collect())
 
     q = transform_foreach_batch(
-        fitted, _name_stream(spark), sink,
+        fitted, stream, sink,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     try:
-        deadline = time.time() + 60
-        while not got and time.time() < deadline:
-            time.sleep(1)
         q.processAllAvailable()
     finally:
         q.stop()
