@@ -104,6 +104,36 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+# Fit-once state: a fitted model, codebook or candidate frame that several
+# queries (or several calls of one query) share, the way a production job
+# fits once and transforms many times.  Keyed by (session, sf_dir, name).
+_FITTED: dict = {}
+
+
+def _fitted(spark: SparkSession, sf_dir: str, name: str, build: Callable):
+    """Return the artifact registered under ``name``, building it once."""
+    key = (id(spark), sf_dir, name)
+    if key not in _FITTED:
+        _FITTED[key] = build()
+    return _FITTED[key]
+
+
+def reset_fitted() -> None:
+    """Release everything the registry holds and empty it, so the next call
+    of each query rebuilds from scratch.  A DataFrame drops its cache entry
+    and, if it is ``localCheckpoint``-ed, its checkpoint RDD; a model drops
+    its own caches through ``unpersist()``."""
+    for obj in _FITTED.values():
+        if isinstance(obj, DataFrame):
+            obj.unpersist()
+            plan = obj._jdf.queryExecution().analyzed()
+            if plan.nodeName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+        elif hasattr(obj, "unpersist"):
+            obj.unpersist()
+    _FITTED.clear()
+
+
 # ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
@@ -139,7 +169,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# query helpers (shared by queries() and bench.py)
+# query helpers (the queries() entries and the fit-once helpers they share)
 # ---------------------------------------------------------------------------
 
 def q_preprocess_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,20 +246,13 @@ def q_cossim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entitymatchingmodel_spark.operators.cossim_indexer import CosSimIndexer
 
     gt, names = _part_gt_names(spark, sf_dir)
-    # memoize the FITTED model per (session, sf_dir) — fit-once/query-many
-    # (the production posture, and the _cossim_cands idiom): without it,
-    # repeated calls each persist a fresh GT index + names-weight cache and
-    # the accumulating evicted-block churn dominates the measurement
-    key = ("cossim_lsh_model", id(spark), sf_dir)
-    if key not in _CANDS_CACHE:
-        _CANDS_CACHE[key] = CosSimIndexer(
-            tokenizer="words", ngram=1, k=5, lower_bound=0.1, max_vocab=None,
-            score_decimals=6, strategy="lsh",
-        ).fit(gt)
-    model = _CANDS_CACHE[key]
-    for cached in (model.gt_weights, model.tfidf.vocab):
-        if not cached.storageLevel.useMemory:
-            cached.persist()  # re-mark after an external clearCache
+    # fit once per registry lifetime: without it, repeated calls each
+    # persist a fresh GT index + names-weight cache and the accumulating
+    # evicted-block churn dominates the measurement
+    model = _fitted(spark, sf_dir, "cossim_lsh_model", lambda: CosSimIndexer(
+        tokenizer="words", ngram=1, k=5, lower_bound=0.1, max_vocab=None,
+        score_decimals=6, strategy="lsh",
+    ).fit(gt))
     out = model.transform(names)
     return out.select("uid", "gt_uid", F.round("score", 6).alias("score"), "rank")
 
@@ -798,24 +821,15 @@ _IPQR_SHORTLIST = 15  # refine: ADC shortlist = 3x the final k
 
 
 def _pq_cb(spark: SparkSession, sf_dir: str, emb: DataFrame, normalize: bool) -> DataFrame:
-    """Deterministic PQ codebook, memoized per (session, sf_dir, params) —
-    the fit-once/transform-many posture (`_CANDS_CACHE` / kmeans
-    persist_handles precedent, r11 verdict #4: disclosed, not gaming; the
-    bench now reports the cold repeat next to the median).  The codebook
-    is a fitted model artifact (pq_codebooks_from_ids localCheckpoints its
-    m*k rows), rebuilt per repeat before r12 — one corpus TakeOrdered +
-    geometry probe per repeat across THREE contract rows for an artifact
-    the production posture builds once (PQModel.fit/save).  localCheckpoint
-    survives the bench's clearCache scrub by construction (RDD storage,
-    not catalog cache), so no re-persist guard is needed."""
+    """Deterministic PQ codebook, registered as fit-once state: a fitted
+    model artifact (pq_codebooks_from_ids localCheckpoints its m*k rows)
+    shared by three contract rows, which the production posture builds once
+    (PQModel.fit/save)."""
     from entitymatchingmodel_spark.operators.pq import pq_codebooks_from_ids
 
-    key = ("pq_cb", id(spark), sf_dir, _PQ_M, _PQ_K, normalize)
-    if key not in _CANDS_CACHE:
-        _CANDS_CACHE[key] = pq_codebooks_from_ids(
-            emb, "vec_id", "embedding", _PQ_M, _PQ_K, normalize=normalize
-        )
-    return _CANDS_CACHE[key]
+    return _fitted(spark, sf_dir, f"pq_cb_{normalize}", lambda: pq_codebooks_from_ids(
+        emb, "vec_id", "embedding", _PQ_M, _PQ_K, normalize=normalize
+    ))
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1187,54 +1201,37 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(queries, emb, "vec_id", "embedding", k=5, score_decimals=6)
 
 
-# Shared-index memo: several queries consume the same fitted candidate set
-# (the engine's normal posture — fit once, transform many). Persisted per
-# (session, sf_dir); identical semantics, no recompute per query.
-_CANDS_CACHE: dict = {}
-
-
 def _cossim_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted cosine candidate set (and the model behind it), shared
+    fit-once state of the rank/best-match/aggregation/supervised queries."""
     from entitymatchingmodel_spark.operators.cossim_indexer import CosSimIndexer
 
-    key = ("cossim", id(spark), sf_dir)
-    if key not in _CANDS_CACHE:
-        gt, names = _part_gt_names(spark, sf_dir)
-        model = CosSimIndexer(
-            tokenizer="words", ngram=1, k=5, lower_bound=0.1, max_vocab=None,
-            score_decimals=6,
-        ).fit(gt)
-        _CANDS_CACHE[key] = model.transform(names).persist()
-    cands = _CANDS_CACHE[key]
-    if not cands.storageLevel.useMemory:
-        # An external clearCache() (the bench's per-query scrub) drops the
-        # blocks AND the persist marker; re-mark so consumers keep the
-        # fit-once/transform-many posture instead of silently recomputing
-        # the candidate join on every action.
-        cands.persist()
-    return cands
+    gt, names = _part_gt_names(spark, sf_dir)
+    model = _fitted(spark, sf_dir, "cossim_model", lambda: CosSimIndexer(
+        tokenizer="words", ngram=1, k=5, lower_bound=0.1, max_vocab=None,
+        score_decimals=6,
+    ).fit(gt))
+    return _fitted(
+        spark, sf_dir, "cossim_cands", lambda: model.transform(names).persist()
+    )
 
 
 def _sni_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SNI candidate pairs with both name strings — memoized + persisted
-    like _cossim_cands (fit-once/transform-many posture)."""
+    """SNI candidate pairs with both name strings — persisted fit-once
+    state like _cossim_cands."""
     from entitymatchingmodel_spark.operators.sni_indexer import SNIIndexer
 
-    key = ("sni_pairs", id(spark), sf_dir)
-    if key not in _CANDS_CACHE:
-        gt, names = _part_gt_names(spark, sf_dir)
-        pairs = SNIIndexer(window_length=5).fit(gt).transform(names)
-        _CANDS_CACHE[key] = (
-            pairs.join(names, "uid")
-            .join(
-                gt.select("gt_uid", F.col("preprocessed").alias("gt_preprocessed")),
-                "gt_uid",
-            )
-            .persist()
+    gt, names = _part_gt_names(spark, sf_dir)
+    model = _fitted(spark, sf_dir, "sni_model", lambda: SNIIndexer(window_length=5).fit(gt))
+    return _fitted(spark, sf_dir, "sni_pairs", lambda: (
+        model.transform(names)
+        .join(names, "uid")
+        .join(
+            gt.select("gt_uid", F.col("preprocessed").alias("gt_preprocessed")),
+            "gt_uid",
         )
-    pairs = _CANDS_CACHE[key]
-    if not pairs.storageLevel.useMemory:
-        pairs.persist()  # re-mark after an external clearCache (see _cossim_cands)
-    return pairs
+        .persist()
+    ))
 
 
 def q_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1596,15 +1593,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sni_pairs_with_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alias of :func:`_sni_pairs` (it built the identical frame under the
-    identical memo key, but WITHOUT the re-persist-after-clearCache guard —
-    so queries entering through this name silently lost the cache after
-    the bench's per-query scrub and re-derived the whole SNI DAG on every
-    reference; vocab_features references the frame twice per execution)."""
-    return _sni_pairs(spark, sf_dir)
-
-
 def q_vocab_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary hit/miss features (SURVEY §2.10 M2) over SNI pairs.
 
@@ -1617,7 +1605,7 @@ def q_vocab_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocabulary_features_joined,
     )
 
-    pairs = _sni_pairs_with_names(spark, sf_dir)
+    pairs = _sni_pairs(spark, sf_dir)
     _, names = _part_gt_names(spark, sf_dir)
     tiers = Vocabulary.fit_tiers(
         names.select("preprocessed").distinct(), ["preprocessed"],
@@ -1654,7 +1642,7 @@ def q_country_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entitymatchingmodel_spark.operators.features import extra_equality_feature
 
     part = _t(spark, sf_dir, "part")
-    pairs = _sni_pairs_with_names(spark, sf_dir)
+    pairs = _sni_pairs(spark, sf_dir)
     nm_c = part.select(
         F.col("p_partkey").alias("uid"),
         F.nullif(F.col("p_brand"), F.lit("Brand#11")).alias("country"),
@@ -2208,12 +2196,18 @@ def _supervised_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SUP_MODEL_CACHE: dict = {}
+def _supervised_model(spark: SparkSession, sf_dir: str):
+    """The GBT scorer the scoring-only and quality queries share."""
+    from entitymatchingmodel_spark.operators.supervised import SupervisedScorer
+
+    return _fitted(spark, sf_dir, "supervised_model", lambda: SupervisedScorer(
+        score_col="score", max_iter=8
+    ).fit(_supervised_cands(spark, sf_dir)))
 
 
 def q_supervised_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full supervised layer: GBT training + scored candidates + best-match
-    flags.  Deliberately NOT cached — this query times the one-off fit.
+    flags.  Deliberately NOT registered — this query times the one-off fit.
 
     Not SQL-expressible (gradient-boosted model) -> rows-only check.
     """
@@ -2221,32 +2215,20 @@ def q_supervised_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cands = _supervised_cands(spark, sf_dir)
     model = SupervisedScorer(score_col="score", max_iter=8).fit(cands)
-    _SUP_MODEL_CACHE[(id(spark), sf_dir)] = model
     out = model.transform(cands)
     return out.select("uid", "gt_uid", "nm_score", "best_rank", "best_match")
 
 
 def q_supervised_score_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scoring-only supervised layer: the fitted GBT is cached across calls
-    so this query times the PER-BATCH scoring cost users pay at 100x —
-    all-JVM feature expressions + tree eval — separately from the one-off
-    boosting iterations ``supervised_scores`` measures.
+    """Scoring-only supervised layer: the fitted GBT is fit-once state
+    (:func:`_supervised_model`), so after the first call this query times
+    the PER-BATCH scoring cost users pay at 100x — all-JVM feature
+    expressions + tree eval — separately from the one-off boosting
+    iterations ``supervised_scores`` measures.
 
     Not SQL-expressible (gradient-boosted model) -> rows-only check.
     """
-    from entitymatchingmodel_spark.operators.supervised import SupervisedScorer
-
-    key = (id(spark), sf_dir)
-    if key not in _SUP_MODEL_CACHE:
-        model = SupervisedScorer(score_col="score", max_iter=8).fit(
-            _supervised_cands(spark, sf_dir)
-        )
-        _SUP_MODEL_CACHE[key] = model
-        # one throwaway scoring pass: warms codegen + the Python feature-UDF
-        # workers so only the FIRST timed call carries fit/warm-up cost and
-        # repeat timings measure steady-state scoring
-        model.transform(_supervised_cands(spark, sf_dir)).count()
-    out = _SUP_MODEL_CACHE[key].transform(_supervised_cands(spark, sf_dir))
+    out = _supervised_model(spark, sf_dir).transform(_supervised_cands(spark, sf_dir))
     return out.select("uid", "gt_uid", "nm_score", "best_rank", "best_match")
 
 
@@ -2262,14 +2244,7 @@ def q_supervised_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema pinned in tests/test_schema_contract.py, thresholds asserted in
     tests/test_supervised_accuracy.py.
     """
-    from entitymatchingmodel_spark.operators.supervised import SupervisedScorer
-
-    key = (id(spark), sf_dir)
-    if key not in _SUP_MODEL_CACHE:
-        _SUP_MODEL_CACHE[key] = SupervisedScorer(score_col="score", max_iter=8).fit(
-            _supervised_cands(spark, sf_dir)
-        )
-    out = _SUP_MODEL_CACHE[key].transform(_supervised_cands(spark, sf_dir))
+    out = _supervised_model(spark, sf_dir).transform(_supervised_cands(spark, sf_dir))
     # same label rule as the fit: correct = entity_id == gt_entity_id
     scored = out.withColumn(
         "correct", F.col("entity_id") == F.col("gt_entity_id")
@@ -2723,8 +2698,8 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict ORDER is deliberate for the CORRECTNESS check only (the bench
-    shuffles its own execution order per repeat, see bench.py): the
+    """Dict ORDER is deliberate for the CORRECTNESS check only (bench.py
+    runs the queries in its own seeded-shuffled order): the
     driver's correctness file holds at most 50 rows per round, so queries
     are listed most-in-need-of-a-check first.
 

@@ -1,32 +1,29 @@
-"""Per-round benchmark: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON
-line {"metric", "value", "unit", "queries", "sf"}.
+"""Contract benchmark: runs every ``__spark_entry__.queries()`` entry at
+$SPARK_GRAFT_SF_DIR (the sf0.1 test data by default) on
+local[$SPARK_GRAFT_CPUS], $SPARK_GRAFT_BENCH_REPEATS times each (default 5),
+and prints ONE JSON summary line last.
 
 Each query is executed to completion JVM-side via the noop sink (no
-driver-collect overhead polluting the measurement).
+result collection polluting the measurement), and each repeat runs
+inside a ``perfbench.spans.Tracer`` span, so every query carries its Spark
+counters (jobs, tasks, executor run ms, shuffle and spill bytes) next to its
+wall time.  Wall time on a shared box swings by tens of percent; the
+counters do not, so they are the regression signal.
 
-ORDER-INSENSITIVE by construction (round 5): r4 showed that per-query
-medians move 2-3x with NO code change when the `queries()` dict order
-changes (ivf_topk 2.06->5.32s after being moved to run right behind the
-5.8s simhash_near_pairs self-join) — adjacency effects (heap/GC shadow of
-the previous query, lingering cached blocks, streaming warm-up) were being
-charged to whichever query happened to run next.  Countermeasures:
+Protocol, per query:
 
-- before each query's repeat block: `spark.catalog.clearCache()` evicts
-  any cached blocks a previous query leaked (persist handles, LRU
-  leftovers) and an explicit JVM GC collects the predecessor's heap
-  garbage on the bench's dime — so no query pays another query's shadow;
-- query order is seeded-shuffled, so any residual adjacency is not tied
-  to the `queries()` dict order round over round.
+- a scrub first: ``reset_fitted()`` releases the contract's fit-once
+  registry, ``spark.catalog.clearCache()`` evicts cached blocks a previous
+  query leaked, and an explicit JVM GC collects the predecessor's heap
+  garbage — so no query pays another query's shadow, and repeat 1 rebuilds
+  every fitted artifact it uses (the cold run);
+- the repeats then run CONSECUTIVELY with no scrub between them, so a
+  query's own persists and registry entries warm its later repeats; the
+  median measures the steady state, the first repeat the cold lineage;
+- query order is seeded-shuffled, so residual adjacency effects are not
+  tied to the ``queries()`` dict order.
 
-A query's N repeats run CONSECUTIVELY with no scrub between them — Spark's
-cache manager matches persisted plans structurally, so a query's own
-internal persists warm its later repeats exactly as in earlier rounds;
-the median therefore measures the query's steady state (scrubbing between
-repeats was measured to inflate internally-persisting queries 2-5x by
-charging every repeat the full cold lineage).
-
-See BENCH_NOTES.md for the experiment that pinned the mechanism.
+See BENCH_NOTES.md for the experiments behind the protocol.
 """
 
 from __future__ import annotations
@@ -36,31 +33,41 @@ import os
 import random
 import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO_DIR)
+
+import __spark_entry__ as E  # noqa: E402
+from perfbench.spans import COUNTERS, Tracer  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
 
-    import __spark_entry__ as E
     from entitymatchingmodel_spark.session import get_spark
 
-    spark = get_spark(
-        "bench", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir, cpus)
+    per_query = run_queries(spark, sf_dir, E.queries(), repeats)
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    detail, summary = report(per_query, sf, cpus, repeats)
+    # Readers parse the LAST stdout line from a captured tail, which the
+    # full detail once outran (BENCH_r07.json "parsed": null): print the
+    # detail first, then the compact summary that points at the side file.
+    print(json.dumps(detail))
+    print(json.dumps(summary))
 
-    # Warm up JVM/codegen/parquet-footer caches so the first measured query
-    # isn't charged session startup costs.
+
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Warm JVM/codegen/parquet-footer caches and the Python worker pool so
+    the first measured query is not charged session start-up."""
     for t in ("part", "lineitem", "documents", "embeddings", "orders", "customer"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    # Spin up the Python worker pool (pandas import + Arrow channel per core)
-    # so the first pandas-UDF query isn't charged worker startup either.
     (
         spark.range(cpus * 4)
         .repartition(cpus)
@@ -68,116 +75,79 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # Median-of-N per query: single-shot timings on a shared box are noise-
-    # dominated (observed 1.9s<->17.4s swings on identical code between
-    # rounds); the median makes round-over-round deltas meaningful.  The
-    # repeats run consecutively (own caches warm, see module docstring)
-    # behind a per-query scrub, in seeded-shuffled query order.
-    # 5 repeats: this box shows transient multi-second stalls (an
-    # identical-code query measured 2.8s and 35s medians-of-3 in adjacent
-    # bench invocations); with 5 consecutive runs a stall must span 3 of
-    # them to corrupt the median.
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
-    qs = E.queries()
+
+def run_queries(spark, sf_dir: str, qs: dict, repeats: int) -> dict:
+    """Run each query ``repeats`` times behind one scrub; returns, per query
+    in ``qs`` order, the median and cold wall seconds plus the median of each
+    Spark counter over the repeats and the cold repeat's ``jobs``."""
+    tracer = Tracer(spark.sparkContext)
     jvm_system = spark.sparkContext._jvm.System
-
-    # Pre-flight sentinel probe (r11 verdict #1): this box shows hours-long
-    # host-level interference episodes that inflate many-short-stage Spark
-    # work 1.5-4x with NO load-average signature.  Probe three sentinel
-    # queries (median-of-3, bench scrub protocol) against their pinned
-    # clean-box medians (r11 run H, the accepted idle-box bench) and report
-    # the median inflation ratio in the output JSON so a degraded-box run
-    # is self-describing.  The sentinels are re-measured normally in the
-    # main loop below; the probe changes no per-query methodology.
-    sentinel_bands = {"lang_id": 0.52, "c4_rules": 0.36, "streaming_time_join": 2.26}
-    sentinel_ratios = []
-    for name, clean in sentinel_bands.items():
-        if name not in qs:
-            continue
-        spark.catalog.clearCache()
-        jvm_system.gc()
-        reps = []
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reps.append(time.time() - t0)
-        sentinel_ratios.append(statistics.median(reps) / clean)
-    sentinel_inflation = round(statistics.median(sentinel_ratios), 2) if sentinel_ratios else None
-
     order = list(qs)
     random.Random(5).shuffle(order)
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
+    out: dict[str, dict] = {}
     for name in order:
+        E.reset_fitted()
         spark.catalog.clearCache()
         jvm_system.gc()
         runs = []
         for _ in range(repeats):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[name] = round(statistics.median(runs), 3)
-        # repeat-1 = cold lineage (post-scrub): keeps the memoized-fit
-        # families honest next to the steady-state median (r11 verdict #9).
-        cold[name] = round(runs[0], 3)
-    timings = {name: timings[name] for name in qs}
-    cold = {name: cold[name] for name in qs}
+            with tracer.span(name) as s:
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(s)
+        entry = {
+            "median_s": round(statistics.median(s.end - s.start for s in runs), 3),
+            "cold_s": round(runs[0].end - runs[0].start, 3),
+            "cold_jobs": runs[0].counters["jobs"],
+        }
+        for c in COUNTERS:
+            entry[c] = statistics.median_low(s.counters[c] for s in runs)
+        out[name] = entry
+    E.reset_fitted()
+    return {name: out[name] for name in qs}
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    total = round(sum(timings.values()), 3)
 
-    # Output contract (round 8): the driver captures the TAIL of stdout and
-    # parses the LAST JSON line.  With 80+ per-query entries the single
-    # detail line outran that capture in round 7 (BENCH_r07.json
-    # "parsed": null), so the detail now goes on an EARLIER line plus a
-    # side file, and the LAST line is a compact, tail-capture-safe summary.
+def write_detail(detail: dict, directory: str, cpus: int) -> str:
+    """Write ``detail`` to the first free BENCH_DETAIL_run{k:03d}_c{cpus}.json
+    in ``directory`` and return its path; no run overwrites another's."""
+    k = 0
+    while True:
+        path = os.path.join(directory, f"BENCH_DETAIL_run{k:03d}_c{cpus}.json")
+        try:
+            with open(path, "x") as f:
+                json.dump(detail, f, indent=1, sort_keys=True)
+            return path
+        except FileExistsError:
+            k += 1
+
+
+def report(per_query: dict, sf: float, cpus: int, repeats: int,
+           directory: str = REPO_DIR) -> tuple[dict, dict]:
+    """Build the detail record, write it once, and return it with the
+    summary line, whose ``queries_file`` names the file written."""
+    total = round(sum(q["median_s"] for q in per_query.values()), 3)
     detail = {
         "metric": "total_query_wall_seconds",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        "queries_cold": cold,
-        "sentinel_inflation": sentinel_inflation,
+        "queries": {n: q["median_s"] for n, q in per_query.items()},
+        "queries_cold": {n: q["cold_s"] for n, q in per_query.items()},
+        "queries_counters": {
+            n: {c: q[c] for c in (*COUNTERS, "cold_jobs")}
+            for n, q in per_query.items()
+        },
+        "repeats": repeats,
         "cpus": cpus,
-        "sf": float(sf),
+        "sf": sf,
     }
-    # Side-file contract (r11 verdict "what's wrong" #2a): the old
-    # max(BENCH_r*)+1 round stamp made the driver's first run OVERWRITE the
-    # committed round-evidence detail file and its second run collide with
-    # the NEXT round's name.  Now: (1) the deterministic path
-    # BENCH_DETAIL.json always holds the CURRENT run (stable name for any
-    # consumer), and (2) an archive copy goes to the first non-existing
-    # BENCH_DETAIL_run*.json — no invocation ever clobbers another's file.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError:
-        detail_path = None
-    for k in range(1000):
-        archive = os.path.join(repo_dir, f"BENCH_DETAIL_run{k:03d}_c{cpus}.json")
-        if not os.path.exists(archive):
-            try:
-                with open(archive, "x") as f:
-                    json.dump(detail, f, indent=1, sort_keys=True)
-            except OSError:
-                pass
-            break
-    print(json.dumps(detail))
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                "sf": float(sf),
-                "n_queries": len(timings),
-                "sentinel_inflation": sentinel_inflation,
-                "queries_file": detail_path,
-            }
-        )
-    )
+    summary = {
+        "metric": "total_query_wall_seconds",
+        "value": total,
+        "unit": "sec",
+        "sf": sf,
+        "n_queries": len(per_query),
+        "queries_file": write_detail(detail, directory, cpus),
+    }
+    return detail, summary
 
 
 if __name__ == "__main__":

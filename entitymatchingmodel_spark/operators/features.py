@@ -454,7 +454,6 @@ def pair_features(
     name_col: str = "preprocessed",
     gt_name_col: str = "gt_preprocessed",
     include_jaro: bool = True,
-    include_fuzz: bool = True,
     decimals: int | None = 6,
 ) -> DataFrame:
     """Append the f_* pair-feature columns (11-feature parity with the
@@ -477,21 +476,13 @@ def pair_features(
         out = out.withColumn("f_jaro", r(jaro_winkler_udf(a, b)))
     else:
         out = out.withColumn("f_jaro", F.lit(0.0))
-    if include_fuzz:
-        out = (
-            out.withColumn("_fz", fuzz_ratios_udf(a, b))
-            .withColumn("f_ratio", r(F.col("_fz.ratio")))
-            .withColumn("f_partial_ratio", r(F.col("_fz.partial_ratio")))
-            .withColumn("f_wratio", r(F.col("_fz.wratio")))
-            .drop("_fz")
-        )
-    else:
-        out = (
-            out.withColumn("f_ratio", F.lit(0.0))
-            .withColumn("f_partial_ratio", F.lit(0.0))
-            .withColumn("f_wratio", F.lit(0.0))
-        )
-    return out
+    return (
+        out.withColumn("_fz", fuzz_ratios_udf(a, b))
+        .withColumn("f_ratio", r(F.col("_fz.ratio")))
+        .withColumn("f_partial_ratio", r(F.col("_fz.partial_ratio")))
+        .withColumn("f_wratio", r(F.col("_fz.wratio")))
+        .drop("_fz")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -4,10 +4,22 @@ Runs every __spark_entry__.queries() entry at a given SF and compares with
 the DuckDB oracle: row count, schema (column names), and order-insensitive
 values (columns sorted by name, rows sorted, 6dp float tolerance check plus
 an exact-match indicator to predict the driver's value-hash).
+
+Usage: python tools/check_oracle.py [SF_DIR] [name,name,...]
+
+DuckDB runs in this process with a fixed memory limit and thread cap, and
+the process's address space is capped once the Spark JVM is up: DuckDB's
+memory_limit bounds its buffer manager only, and the oracle SQL of
+curate_batch / streaming_curation allocates past it (uncapped, the process
+grew past 13 GiB).  Such a query then reports an ORACLE ERROR instead of
+exhausting the machine, and the full sf0.01 contract runs on a 4-core,
+15 GB machine.
 """
 
 from __future__ import annotations
 
+import os
+import resource
 import sys
 import time
 
@@ -15,11 +27,13 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
+DUCKDB_CONFIG = {"memory_limit": "2GB", "threads": 2}
+ADDRESS_SPACE_BYTES = 8 * 2**30
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -37,8 +51,10 @@ def main():
 
     spark = get_spark("oracle-check", master="local[16]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
+    # set once the JVM runs: a child process keeps the limits it started with
+    resource.setrlimit(resource.RLIMIT_AS, (ADDRESS_SPACE_BYTES, ADDRESS_SPACE_BYTES))
 
-    con = duckdb.connect()
+    con = duckdb.connect(config=DUCKDB_CONFIG)
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
