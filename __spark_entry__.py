@@ -28,10 +28,11 @@ from entitymatchingmodel_spark.operators.features import LEGAL_FORM_TERMS
 # oracle (leftmost-first alternation, longest term first)
 _LEF_RE_SQL = "(?:^|\\s)(" + "|".join(LEGAL_FORM_TERMS) + ")$"
 
-# char-trigram profiles shared verbatim by the Spark lang-id scorer and its
-# DuckDB oracle (rendered as a replace()-count sum — the same
-# non-overlapping-equals-all-positions counting the Spark side uses; no
-# profile trigram is self-overlapping, asserted at package import)
+# char-trigram profiles shared verbatim by the Spark lang-id scorers and
+# their DuckDB oracle.  The oracle renders them as a replace()-count sum, a
+# formulation neither package scorer uses: non-overlapping counting equals
+# the scorers' all-positions counting only because no profile trigram is
+# self-overlapping, which the package asserts at import.
 from entitymatchingmodel_spark.functions.text import (
     C4_POLICY_PHRASES,
     CHAR_TRIGRAM_PROFILES,
@@ -1144,18 +1145,12 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be engine-deterministic (hits + n_trigrams oracle-checked, not
     just the argmax label).
 
-    r11 OPTIMIZATION: scored through the Arrow kernel shape
-    (scorer="kernel" — guide §4.2: one vectorized O(len) pass per batch
-    vs the literal expression's 840 per-row replace() scans at 42
-    profiles; 8.2s -> ~0.5s at sf0.1, byte-identical output).  The
-    literal expression shape keeps its three-shape parity pin in
-    tests/test_text_functions.py and stays available via
-    lang_id_table(..., scorer="literal")."""
+    Scored through the Arrow kernel shape (lang_id_table: one vectorized
+    O(len) pass per batch); the oracle is the independent replace()-count
+    SQL."""
     from entitymatchingmodel_spark.functions.text import lang_id_table
 
-    return lang_id_table(
-        _lang_planted(spark, sf_dir), "doc_id", "text", scorer="kernel"
-    )
+    return lang_id_table(_lang_planted(spark, sf_dir), "doc_id", "text")
 
 
 def q_lang_id_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1238,7 +1233,7 @@ def q_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native name-pair features (SURVEY §2.10 M1) over SNI candidate pairs."""
     from entitymatchingmodel_spark.operators.features import pair_features
 
-    out = pair_features(_sni_pairs(spark, sf_dir), include_jaro=False)
+    out = pair_features(_sni_pairs(spark, sf_dir))
     return out.select(
         "uid", "gt_uid", "f_norm_ed", "f_token_sort", "f_token_set",
         "f_name_cut", "f_abbr_match", "f_abs_len_diff", "f_len_ratio",
@@ -1597,21 +1592,21 @@ def q_vocab_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary hit/miss features (SURVEY §2.10 M2) over SNI pairs.
 
     Fully distributed path: the tier table never leaves the cluster —
-    ``fit_tiers`` keeps it as a DataFrame and the feature step broadcast-
-    joins it."""
+    ``fit_vocab_tiers`` keeps it as a DataFrame and the feature step
+    broadcast-joins it."""
     from entitymatchingmodel_spark.operators.features import (
         VOCAB_FEATURES,
-        Vocabulary,
-        vocabulary_features_joined,
+        fit_vocab_tiers,
+        vocabulary_features,
     )
 
     pairs = _sni_pairs(spark, sf_dir)
     _, names = _part_gt_names(spark, sf_dir)
-    tiers = Vocabulary.fit_tiers(
+    tiers = fit_vocab_tiers(
         names.select("preprocessed").distinct(), ["preprocessed"],
         very_common_min_df=0.05, common_min_df=0.001,
     )
-    out = vocabulary_features_joined(pairs, tiers, ["uid", "gt_uid"])
+    out = vocabulary_features(pairs, tiers, ["uid", "gt_uid"])
     return out.select("uid", "gt_uid", *VOCAB_FEATURES)
 
 
@@ -2711,8 +2706,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     changed in r11 —
     curate_batch and streaming_curation (scorer rewiring: kernel default
     scored post-dedup, the janino-64KB fix), lang_id (text.py hosts the
-    new scorer shapes; the literal expression is untouched but shares
-    the file), ann_cosine_topk (the max_queries collect guard) and
+    new scorer shapes), ann_cosine_topk (the max_queries collect guard) and
     ivf_pq_refined (refine_topk's max_shortlist_rows guard); (3) the
     seven r8-green rows promised the r11 lead at the r10 rotation
     (url_normalize, tpch_q1_pricing, events_windowed, events_sessions,
@@ -3865,7 +3859,7 @@ _ORACLE = {
         UNION ALL
         SELECT doc_id, url_norm FROM d WHERE url_norm IS NULL
     """,
-    # mirrors lang_scores_chargram: normalize -> overlapping trigrams ->
+    # mirrors lang_scores_kernel: normalize -> overlapping trigrams ->
     # per-language profile hit counts -> argmax with alphabetical tie-break
     "lang_id": f"""
         WITH d AS (
@@ -4164,13 +4158,15 @@ _ORACLE = {
     # -> quality gate (same formula as curation_pipeline) -> exact dedup.
     # Projected to columns CONSTANT within a duplicate group, so WHICH
     # physical row the stream's dropDuplicatesWithinWatermark kept cannot
-    # affect the result set.
+    # affect the result set.  The hit CTE `s` is MATERIALIZED: inlined
+    # into each of its references, its replace()-count terms ran DuckDB out
+    # of memory (same for curate_batch below).
     "streaming_curation": f"""
         WITH n AS (SELECT doc_id, text,
                           ' ' || trim(regexp_replace(lower(coalesce(text, '')),
                                       '[^a-z]+', ' ', 'g')) || ' ' AS t
                    FROM documents),
-        s AS (SELECT doc_id, text,
+        s AS MATERIALIZED (SELECT doc_id, text,
                      {_lang_hits_select()}
               FROM n),
         b AS (SELECT *, {_lang_best_expr()} AS best FROM s),
@@ -5084,7 +5080,7 @@ _ORACLE["curate_batch"] = f"""
                  ' ' || trim(regexp_replace(lower(coalesce(kept_text, '')),
                              '[^a-z]+', ' ', 'g')) || ' ' AS t
           FROM reps),
-    s AS (SELECT doc_id, quality, content_hash,
+    s AS MATERIALIZED (SELECT doc_id, quality, content_hash,
                  {{_LANG_HITS}}
           FROM n),
     b AS (SELECT *, {{_LANG_BEST}} AS best FROM s)
@@ -5433,8 +5429,8 @@ _ORACLE["ivf_pq_refined"] = f"""
 
 def oracle_sql() -> dict[str, str]:
     out = dict(_ORACLE)
-    # the three scorer SHAPES (literal expression / broadcast-join /
-    # Arrow numpy kernel) are pinned equal by sharing ONE oracle
+    # the two scorer SHAPES (Arrow numpy kernel, which lang_id also runs,
+    # and broadcast-join) are pinned equal by sharing ONE oracle
     out["lang_id_joined"] = out["lang_id"]
     out["lang_id_kernel"] = out["lang_id"]
     # the bloom prefilter is exact by construction (confirm anti-join

@@ -221,8 +221,7 @@ CHAR_TRIGRAM_PROFILES: dict[str, tuple[str, ...]] = {
            "ija", "ja "),
     # r11 tranche (same [a-z ]-residue rule), grown under the r11
     # data-driven scorer shapes (kernel/join keep generated-code size
-    # constant; the literal shape is re-checked by plan_audit's codegen
-    # canary after every growth): is 'ekki/hann/hun/hvad/eru/sem/-inn/
+    # constant): is 'ekki/hann/hun/hvad/eru/sem/-inn/
     # essi' accent-free residue, lb 'vun/mat/fir/ass/ginn/huet/esou/ech/
     # net/mee', la '-ibus/-orum/-um/-tur/cum/qui/sunt/iam/-ius/-tis',
     # eo 'kaj/kiu/ankau/-ojn/-ajn/-ulo/-os/cio/cia', mi 'whaka-/nga/kei/
@@ -260,11 +259,12 @@ CHAR_TRIGRAM_PROFILES: dict[str, tuple[str, ...]] = {
            "dia", "ia ", " ol", "lon", "tam", "fa ", " fa", "tsy", "sy ",
            " sy", "ho "),
 }
-# The replace()-based occurrence counter below requires that no profile
-# trigram can overlap ITSELF (period 1: "aaa"; period 2: t[0]==t[2], e.g.
-# "ara" in "arara") — then non-overlapping left-to-right counting equals
-# the all-positions count.  Enforced at import so a profile edit cannot
-# silently change the scorer's semantics vs its oracles.
+# The DuckDB oracle's replace()-count SQL (``_trigram_sql_hits`` in
+# __spark_entry__.py) requires that no profile trigram can overlap ITSELF
+# (period 1: "aaa"; period 2: t[0]==t[2], e.g. "ara" in "arara") — then
+# non-overlapping left-to-right counting equals the all-positions count
+# the package scorers use.  Enforced at import so a profile edit cannot
+# silently desync the scorers from their oracle.
 for _lang, _profile in CHAR_TRIGRAM_PROFILES.items():
     for _t in _profile:
         if len(_t) != 3 or _t[0] == _t[2]:
@@ -286,172 +286,32 @@ def _chargram_norm(c: Column) -> Column:
     )
 
 
-def lang_scores_chargram(c: Column) -> Column:
-    """Struct ``(lang, hits, n_trigrams)`` for the best-matching char-trigram
-    profile: every overlapping trigram of the normalized text is tested
-    against each language's profile; the language with the most hits wins,
-    ties break to the alphabetically-first language; ``('und', 0, n)``
-    when no profile hits.
-
-    Counting shape: per profile trigram, occurrences =
-    ``(length(norm) - length(replace(norm, t))) / 3`` — plain JVM string
-    ops in ONE flat projection, so whole-stage codegen's subexpression
-    elimination computes the normalize regex once per row.  (Two earlier
-    formulations were measured and rejected: a per-index
-    ``substring(norm, i, 3)`` lambda re-evaluates the normalize ONCE PER
-    TRIGRAM — O(n²) regex work; an arrays_zip char-slice gram array is
-    O(n) but materializes the array once per profile in interpreted HOFs
-    — ~11s for the 5000-doc contract query vs <1s for this.)  Correct
-    because no profile trigram can overlap itself (asserted at import),
-    so non-overlapping replace() counting equals the all-positions count.
-    """
-    # Column-API shape: the single-element transform LET-BINDS the
-    # normalized string, so the ~140 replace() calls inside the lambda
-    # each scan the bound value instead of re-running the normalize regex
-    # (an inline expression tree would be re-evaluated per reference:
-    # codegen CSE gives up on an expression this wide and the interpreted
-    # fallback has no subexpression elimination — measured 1.7s for 500
-    # docs inline vs ~0.1s with the let-binding).  For batch tables,
-    # :func:`lang_id_table` projects the norm as a real column instead —
-    # full codegen, ~30% faster again.
-    return F.transform(F.array(_chargram_norm(c)), _score_from_norm)[0]
-
-
-def _score_from_norm(norm: Column) -> Column:
-    """(lang, hits, n_trigrams) struct from an already-NORMALIZED string
-    value (a let-bound lambda variable or a projected column) — shared by
-    :func:`lang_scores_chargram` and :func:`lang_id_table` so the scoring
-    rules cannot drift between the two shapes."""
-    langs = sorted(CHAR_TRIGRAM_PROFILES)
-    n_len = F.length(norm)
-
-    def hits_for(lang: str) -> Column:
-        removed = [
-            n_len - F.length(F.replace(norm, F.lit(t)))
-            for t in CHAR_TRIGRAM_PROFILES[lang]
-        ]
-        total = removed[0]
-        for r in removed[1:]:
-            total = total + r
-        return (total / F.lit(3)).cast("int")
-
-    packed = F.array(
-        *[
-            F.struct(
-                hits_for(lang).alias("hits"),
-                # ties pick max(-index) = smallest index = alphabetically first
-                F.lit(-i).alias("prio"),
-                F.lit(lang).alias("lang"),
-            )
-            for i, lang in enumerate(langs)
-        ]
-    )
-    top = F.array_max(packed)
-    return F.struct(
-        F.when(top["hits"] > 0, top["lang"]).otherwise(F.lit("und")).alias("lang"),
-        top["hits"].cast("int").alias("hits"),
-        F.greatest(n_len - 2, F.lit(0)).cast("int").alias("n_trigrams"),
-    )
-
-
-def lang_id_table(
-    df: DataFrame, id_col: str, text_col: str, scorer: str = "literal"
-) -> DataFrame:
-    """(id, lang, hits, n_trigrams) per document.
-
-    ``scorer`` picks the shape (all shapes are pinned exactly equal in
-    tests/test_text_functions.py — same normalizer, same counting, same
-    tie-break):
-
-    * ``"literal"``: the whole-stage-codegen expression shape — the
-      normalized string is projected as a REAL column first, so the
-      replace() counts run as flat codegen expressions over a column
-      reference (no HOF interpreter; measured ~30% faster than the
-      Column-API let-binding at sf0.1).  Generated-code size AND per-row
-      cost grow with the profile dictionary (O(len x n_trigrams) char
-      work — 840 replace() scans per row at 42 profiles), so this shape
-      lost its front-door role as the dictionary grew; it remains the
-      zero-dependency pure-JVM witness.
-    * ``"kernel"``: the Arrow-batched numpy kernel
-      (:func:`lang_scores_kernel`) — ONE O(len) coding pass per document,
-      profile lookups in a per-executor table, cost and plan size
-      constant in dictionary size.  ~15x faster than the literal shape at
-      42 profiles/sf0.1 (r11 measurement) and the curation front-doors'
-      default.
-    """
-    if scorer not in ("literal", "kernel"):
-        raise ValueError(
-            f"scorer must be 'literal' or 'kernel'; got {scorer!r}"
-        )
-    if scorer == "kernel":
-        s = lang_scores_kernel(F.col(text_col))
-        return df.select(
-            F.col(id_col),
-            s["lang"].alias("lang"),
-            s["hits"].alias("hits"),
-            s["n_trigrams"].alias("n_trigrams"),
-        )
-    normed = df.select(
-        F.col(id_col), _chargram_norm(F.col(text_col)).alias("_n")
-    )
-    s = _score_from_norm(F.col("_n"))
-    return normed.select(
-        F.col(id_col),
-        s["lang"].alias("lang"),
-        s["hits"].alias("hits"),
-        s["n_trigrams"].alias("n_trigrams"),
-    )
-
-
-def lang_id_chargram(c: Column) -> Column:
-    """Language code by char-trigram profile scoring ('und' if no hits) —
-    the scale/robustness upgrade over the stopword :func:`lang_id`
-    (trigram profiles fire on inflected forms and boundary n-grams that a
-    fixed stopword list misses).
-
-    COMPOSITION WARNING (r11, measured): this literal shape's expression
-    tree serializes to ~2.5 MiB at 42 profiles, and a deep pipeline
-    lineage that groups/joins/filters on the resulting column multiplies
-    it into task binaries of tens of MiB (49.7 MiB observed at 8 stages
-    — enough to OOM an 8 GiB driver).  Use it for single projections;
-    for anything composed downstream, use :func:`lang_id_kernel` or
-    :func:`lang_id_join_table` — pinned byte-equal, with plan size
-    CONSTANT in the dictionary."""
-    return lang_scores_chargram(c)["lang"]
-
-
 # ---------------------------------------------------------------------------
-# Data-driven shapes of the char-trigram scorer (r11).
+# Data-driven shapes of the char-trigram scorer.
 #
-# The literal `_score_from_norm` expression grows ~100 bytes of generated
-# Java PER PROFILE TRIGRAM (660 replace() calls at 33 languages), and
-# whole-stage codegen INLINES every fused operator into one method (a
-# partial SortAggregate's sort_addToSorter loop in batch, a stream stage's
-# processNext) with no way to split a single expression tree — so a
-# front-door that fuses the scorer with its other screens crosses janino's
-# hard 64KB-per-method limit and Spark silently drops the WHOLE stage to
-# interpreted row-at-a-time eval (ERROR CodeGenerator: ... Code grows
-# beyond 64 KB; caught by tools/plan_audit.py's codegen canary).  The two
-# shapes below keep generated-code size CONSTANT in dictionary size, so
-# profile growth (fastText-lid ships 176 languages) can never re-trigger
-# the fallback:
+# A literal expression scorer (one replace() count per profile trigram)
+# grows generated Java with the dictionary, and whole-stage codegen
+# inlines every fused operator into one method — so past a few dozen
+# profiles it crosses janino's 64KB-per-method limit and Spark silently
+# drops the WHOLE stage to interpreted eval.  The two shapes below keep
+# generated-code size CONSTANT in dictionary size, so profile growth
+# (fastText-lid ships 176 languages) cannot trigger that fallback:
 #
-# * :func:`lang_scores_kernel` — an Arrow-batched numpy kernel: ONE pass
-#   per document (O(len) vs the replace-counter's O(len x n_trigrams) —
-#   660x less character work at 33 languages), profiles live in a base-28
-#   trigram-code lookup table built once per executor.  A stateless
-#   projection, so it is append-safe on streams, and it plans as its own
-#   ArrowEvalPython node — the surrounding JVM stages codegen cleanly.
+# * :func:`lang_scores_kernel` — an Arrow-batched numpy kernel: ONE O(len)
+#   pass per document, profiles in a base-28 trigram-code lookup table
+#   built once per executor.  A stateless projection, so it is
+#   append-safe on streams, and it plans as its own ArrowEvalPython node —
+#   the surrounding JVM stages codegen cleanly.  The curation front doors
+#   and :func:`lang_id_table` use it.
 # * :func:`lang_id_join_table` — the pure-JVM batch shape: explode trigram
 #   positions, broadcast-join the (gram, lang, prio) profile table, two
 #   bounded aggregates, left-join back.  The profile table is DATA in the
 #   plan's references, not generated code.  Needs aggregation => batch
 #   only.
 #
-# All three shapes are pinned exactly equal in tests: same normalizer,
-# same all-positions counting (equal to the literal shape's non-overlapping
-# replace() counts because no profile trigram self-overlaps — asserted at
-# import above), same alphabetical tie-break, same 'und' zero-hit rule.
+# Both shapes are pinned exactly equal to a plain-Python reference in
+# tests: same normalizer, same all-positions counting, same alphabetical
+# tie-break, same 'und' zero-hit rule.
 # ---------------------------------------------------------------------------
 
 _LANGS_SORTED = tuple(sorted(CHAR_TRIGRAM_PROFILES))
@@ -503,8 +363,8 @@ def _kernel_score_batch(texts):
     base-28 digit 27 poisons every cross-boundary window) so trigram
     coding, profile lookup and per-(doc, gram) counting are single numpy
     passes over the batch, followed by one (docs x grams) @ (grams x langs)
-    count matmul and an argmax whose first-max-wins matches the literal
-    shape's alphabetical tie-break."""
+    count matmul and an argmax whose first-max-wins is the alphabetical
+    tie-break."""
     import numpy as np
 
     lut, member, tr = _kernel_tables()
@@ -547,14 +407,18 @@ def _kernel_score_batch(texts):
 
 
 def lang_scores_kernel(c: Column) -> Column:
-    """Struct ``(lang, hits, n_trigrams)`` from the Arrow-batched numpy
-    kernel — exactly :func:`lang_scores_chargram`'s semantics with
-    generated-code size independent of the profile dictionary (see the
-    section comment above).  The Python-side normalizer mirrors
-    :func:`_chargram_norm` (lower -> collapse non-[a-z] runs to single
-    spaces -> strip -> pad); ``[^a-z]+`` behaves identically in Java and
-    Python regex, and both engines' lowercasing agrees on the Latin
-    repertoire the [a-z]-residue profiles can see."""
+    """Struct ``(lang, hits, n_trigrams)`` for the best-matching
+    char-trigram profile, from the Arrow-batched numpy kernel: every
+    overlapping trigram of the normalized text is tested against each
+    language's profile; the language with the most hits wins, ties break
+    to the alphabetically-first language; ``('und', 0, n)`` when no
+    profile hits.  Generated-code size is independent of the profile
+    dictionary (see the section comment above).  The Python-side
+    normalizer mirrors :func:`_chargram_norm` (lower -> collapse
+    non-[a-z] runs to single spaces -> strip -> pad); ``[^a-z]+``
+    behaves identically in Java and Python regex, and both engines'
+    lowercasing agrees on the Latin repertoire the [a-z]-residue profiles
+    can see."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<lang:string,hits:int,n_trigrams:int>")
@@ -578,15 +442,29 @@ def lang_scores_kernel(c: Column) -> Column:
 
 def lang_id_kernel(c: Column) -> Column:
     """Language code from the Arrow-batched kernel ('und' if no hits) —
-    pinned exactly equal to :func:`lang_id_chargram`."""
+    the scale/robustness upgrade over the stopword :func:`lang_id`
+    (trigram profiles fire on inflected forms and boundary n-grams that a
+    fixed stopword list misses)."""
     return lang_scores_kernel(c)["lang"]
+
+
+def lang_id_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, lang, hits, n_trigrams) per document — the
+    :func:`lang_scores_kernel` struct projected as columns."""
+    s = lang_scores_kernel(F.col(text_col))
+    return df.select(
+        F.col(id_col),
+        s["lang"].alias("lang"),
+        s["hits"].alias("hits"),
+        s["n_trigrams"].alias("n_trigrams"),
+    )
 
 
 def lang_profile_table(spark) -> DataFrame:
     """The char-trigram profiles as a DataFrame ``(gram, lang, prio)`` —
     the broadcast build side of :func:`lang_id_join_table`.  ``prio`` is
     the negated alphabetical index, so ``max(struct(hits, prio, lang))``
-    reproduces the literal shape's alphabetically-first tie-break."""
+    picks the alphabetically-first language on ties."""
     rows = [
         (t, lang, -i)
         for i, lang in enumerate(_LANGS_SORTED)
@@ -598,7 +476,7 @@ def lang_profile_table(spark) -> DataFrame:
 def lang_id_join_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, lang, hits, n_trigrams) per document via the DATA-DRIVEN
     broadcast-join shape — pinned exactly equal to :func:`lang_id_table`
-    (the literal-expression shape), with plan size independent of the
+    (the kernel shape), with plan size independent of the
     profile dictionary: every overlapping trigram position is exploded,
     equi-joined against the broadcast ``(gram, lang, prio)`` profile table
     (matched positions only survive), counted per (id, lang), and the
@@ -748,7 +626,7 @@ def _gopher_rule_cols(
     )
     n_alpha_words = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
     # non-overlapping occurrence counts via length deltas (the same
-    # replace()-counting contract as the lang-id scorer; '#' is length 1
+    # replace()-counting contract as the lang-id oracle; '#' is length 1
     # so overlap is moot, '...' counts greedily left-to-right)
     n_hash = F.length(txt) - F.length(F.replace(txt, F.lit("#"), F.lit("")))
     n_ellipsis = (

@@ -96,7 +96,6 @@ def curate_batch(
     rw_clean: bool = False,
     rw_max_upper_frac: "float | None" = None,
     rw_max_removed_frac: "float | None" = None,
-    lang_scorer: str = "kernel",
 ) -> DataFrame:
     """Curate a batch corpus with the SAME stages and config vocabulary
     as :func:`streaming.curate.curate_stream` — see the module docstring
@@ -126,9 +125,10 @@ def curate_batch(
     5. **Exact content dedup**: min-``id_col`` representative per
        normalized cleaned text (ONE min-struct aggregate).  Adds
        ``content_hash``.
-    6. **Language filter**: char-trigram scorer projected as ``lang``
-       over the (cleaned) representative text; ``langs=()`` keeps every
-       language (column still added).
+    6. **Language filter**: the Arrow-batched char-trigram kernel
+       (:func:`functions.text.lang_id_kernel`) projected as ``lang`` over
+       the (cleaned) deduped representative text; ``langs=()`` keeps
+       every language (column still added).
     7. **LM perplexity gate** (``lm_model`` + ``max_perplexity``): the
        batch scorer joined back on ``id_col``; rows scoring above the
        cap — or unscorable (<2 tokens), which CCNet drops as garbage —
@@ -142,30 +142,7 @@ def curate_batch(
     bounded LM/DSIR scorer rollups.  ``id_col`` must be unique (it
     picks dedup representatives and keys the scorer joins).
 
-    ``lang_scorer`` picks the trigram scorer SHAPE (all three are pinned
-    exactly equal — see functions/text.py's data-driven-scorer section):
-
-    * ``"kernel"`` (default): the Arrow-batched numpy kernel
-      (:func:`functions.text.lang_scores_kernel`), scored on the deduped
-      representatives only.  One O(len) pass per doc, and its
-      ArrowEvalPython node is a codegen boundary — the literal
-      expression's ~660 generated replace() calls, fused with the other
-      screens into the dedup sort's single addToSorter method, blew
-      janino's 64KB limit and silently dropped the hottest map stage to
-      interpreted eval (the r10 judge finding this default fixes).
-    * ``"join"``: the pure-JVM broadcast-join shape
-      (:func:`functions.text.lang_id_join_table`) joined back on
-      ``id_col`` — zero Python, plan size constant in dictionary size;
-      costs two bounded aggregates plus the join-back shuffle.
-    * ``"expr"``: the literal whole-stage-codegen expression (the pre-r11
-      default) — fastest for SMALL dictionaries, but generated-code size
-      grows with the profile count; the codegen canary in
-      tools/plan_audit.py guards the fallback.
     """
-    if lang_scorer not in ("kernel", "expr", "join"):
-        raise ValueError(
-            f"lang_scorer must be 'kernel', 'expr' or 'join'; got {lang_scorer!r}"
-        )
     if df.isStreaming:
         raise ValueError(
             "curate_batch requires a batch DataFrame; use "
@@ -177,8 +154,7 @@ def curate_batch(
         raise ValueError("dsir_ratios and min_dsir must be set together")
 
     from entitymatchingmodel_spark.functions.text import (
-        _chargram_norm,
-        _score_from_norm,
+        lang_id_kernel,
         quality_score,
     )
 
@@ -197,11 +173,7 @@ def curate_batch(
     # lang, LM, DSIR) only on the deduped representatives — result-
     # identical because all three scorers normalize case/edge whitespace
     # exactly like the content hash (every duplicate-group member scores
-    # the same), and strictly cheaper: filter pushdown substitutes a
-    # derived column's defining expression into pushed predicates, so an
-    # early lang filter re-evaluates the ~600-replace scorer per pushed
-    # reference over the RAW corpus; after the dedup it re-evaluates over
-    # the surviving representatives only.
+    # the same), and strictly cheaper: each unique content scores once.
     s = s.withColumn("quality", quality_score(F.col(text_col))).filter(
         F.col("quality") >= min_quality
     )
@@ -246,25 +218,6 @@ def curate_batch(
             )
         toks = word_tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         s = s.filter(F.size(F.filter(toks, lambda t: t.isin(*bad))) == 0)
-    if lang_scorer == "expr":
-        # the literal scorer is PROJECTED here (once — the ~600-replace
-        # trigram expression; the projected normalizer keeps the replace()
-        # counts in flat codegen, the lang_id_table shape) and FILTERED
-        # only after the dedup aggregate below: the aggregate materializes
-        # `lang` inside its min-struct and blocks predicate pushdown (lang
-        # is not a grouping column), so Catalyst cannot substitute the
-        # scorer into the filter predicate.  An adjacent project+filter
-        # pair instead re-evaluates the scorer per pushed reference and
-        # the duplicated expression blows janino's 64KB method limit
-        # inside whole-stage codegen, dropping the whole stage to
-        # interpreted eval (measured 3x wall-clock).  NOTE: even this
-        # single projection, fused with the other screens into the dedup
-        # sort's addToSorter method, exceeds 64KB at 33 profiles — which
-        # is why "expr" is no longer the default.
-        s = s.withColumn("_lang_norm", _chargram_norm(F.col(text_col)))
-        s = s.withColumn(
-            "lang", _score_from_norm(F.col("_lang_norm"))["lang"]
-        ).drop("_lang_norm")
     from entitymatchingmodel_spark.operators.dedup import (
         drop_exact_duplicates,
     )
@@ -272,26 +225,10 @@ def curate_batch(
     s = drop_exact_duplicates(s, id_col, text_col).withColumn(
         "content_hash", F.md5(F.trim(F.lower(F.col(text_col))))
     )
-    if lang_scorer == "kernel":
-        # scored on the deduped representatives only (result-identical:
-        # the kernel normalizes case/edge-whitespace exactly like the
-        # content hash, so every duplicate-group member scores the same);
-        # the ArrowEvalPython node is its own stage — the JVM screens
-        # above codegen cleanly regardless of dictionary size
-        from entitymatchingmodel_spark.functions.text import lang_id_kernel
-
-        s = s.withColumn("lang", lang_id_kernel(F.col(text_col)))
-    elif lang_scorer == "join":
-        from entitymatchingmodel_spark.functions.text import (
-            lang_id_join_table,
-        )
-
-        lt = lang_id_join_table(s, id_col, text_col).select(id_col, "lang")
-        # drop a pre-existing lang column so the join-back REPLACES it —
-        # the same semantics withColumn gives the other two shapes (an
-        # input corpus that already carries `lang`, like the testdata
-        # documents table, must not produce an ambiguous reference)
-        s = s.drop("lang").join(lt, id_col)
+    # scored on the deduped representatives only; the kernel's
+    # ArrowEvalPython node is its own stage, so the JVM screens above
+    # codegen cleanly regardless of dictionary size
+    s = s.withColumn("lang", lang_id_kernel(F.col(text_col)))
     if langs:
         s = s.filter(F.col("lang").isin(*langs))
     if lm_model is not None:

@@ -2,9 +2,9 @@
 
 Reference computes these in pandas with rapidfuzz/cleanco inside a grouped
 pandas UDF (emm/features/pandas_feature_extractor.py:91-148, features_name.py:
-97-141, features_rank.py:31-97).  Here every feature except Jaro-Winkler is a
-JVM-side expression (levenshtein, array ops, windows) — the scoring hot path
-crosses no Python boundary.
+97-141, features_rank.py:31-97).  Here every feature except the four string
+similarities is a JVM-side expression (levenshtein, array ops, windows); the
+four share one pandas UDF with one per-batch memo.
 
 Feature parity map (ref features_name.py):
   norm_ed        <- 1 - levenshtein/maxlen          (native levenshtein)
@@ -13,9 +13,9 @@ Feature parity map (ref features_name.py):
   partial        <- prefix containment ratio (name_cut analog)
   abbr_match     <- initials-of-one == other        (ref abbreviation_util)
   abs_len_diff, len_ratio                            (native)
-  jaro_winkler   <- pandas UDF (no native equivalent)
-  ratio / partial_ratio / w_ratio <- pandas UDF (rapidfuzz-parity indel
-                    similarity via bit-parallel LCS; 0..100 scale)
+  jaro_winkler / ratio / partial_ratio / w_ratio <- ONE pandas UDF
+                    (no native equivalent; rapidfuzz-parity indel
+                    similarity via bit-parallel LCS; ratios 0..100 scale)
 
 Rank features (ref features_rank.py:31-97): score rounded to 5 decimals FIRST
 (ref rounds before ranking, features_rank.py:27-31), then rank / dist_to_max /
@@ -122,24 +122,6 @@ def _jaro_winkler_py(s1: str, s2: str) -> float:
         else:
             break
     return jaro + prefix * 0.1 * (1 - jaro)
-
-
-@pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    # Candidate pairs repeat name pairs heavily (one GT name against many
-    # query rows and vice versa); memoize per batch.  Uses the verified
-    # rapidfuzz fast path when available (see _load_rapidfuzz below —
-    # defined later in the module, resolved at worker call time).
-    jw = _RAPIDFUZZ[1].similarity if _RAPIDFUZZ is not None else _jaro_winkler_py
-    memo: dict[tuple[str, str], float] = {}
-    out = []
-    for x, y in zip(a.fillna(""), b.fillna("")):
-        k = (x, y)
-        r = memo.get(k)
-        if r is None:
-            r = memo[k] = jw(x, y)
-        out.append(r)
-    return pd.Series(out)
 
 
 # ---------------------------------------------------------------------------
@@ -405,8 +387,9 @@ def _load_rapidfuzz():
 _RAPIDFUZZ = _load_rapidfuzz()
 
 
-_FUZZ_SCHEMA = StructType(
+_STRING_SIM_SCHEMA = StructType(
     [
+        StructField("jaro", DoubleType()),
         StructField("ratio", DoubleType()),
         StructField("partial_ratio", DoubleType()),
         StructField("wratio", DoubleType()),
@@ -414,24 +397,27 @@ _FUZZ_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_FUZZ_SCHEMA)
-def fuzz_ratios_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    # Memoized per batch: candidate pairs repeat name pairs heavily, and
-    # the three ratios share no state otherwise.
+@pandas_udf(_STRING_SIM_SCHEMA)
+def string_sims_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+    """Jaro-Winkler plus the three rapidfuzz-parity ratios in one pass over
+    the batch.  Memoized per batch: candidate pairs repeat name pairs
+    heavily (one GT name against many query rows and vice versa)."""
     if _RAPIDFUZZ is not None:
-        fz = _RAPIDFUZZ[0]
+        fz, jw = _RAPIDFUZZ
 
-        def compute(x: str, y: str) -> tuple[float, float, float]:
-            return (fz.ratio(x, y), fz.partial_ratio(x, y), fz.WRatio(x, y))
+        def compute(x: str, y: str) -> tuple[float, float, float, float]:
+            return (jw.similarity(x, y), fz.ratio(x, y),
+                    fz.partial_ratio(x, y), fz.WRatio(x, y))
     else:
 
-        def compute(x: str, y: str) -> tuple[float, float, float]:
+        def compute(x: str, y: str) -> tuple[float, float, float, float]:
             # ratio and partial_ratio are output columns anyway; WRatio
             # reuses the same floats instead of re-deriving them.
             e = _indel_ratio(x, y)
             p = _partial_ratio_py(x, y)
-            return (e, p, _wratio_py(x, y, _end=e, _p=p))
-    memo: dict[tuple[str, str], tuple[float, float, float]] = {}
+            return (_jaro_winkler_py(x, y), e, p,
+                    _wratio_py(x, y, _end=e, _p=p))
+    memo: dict[tuple[str, str], tuple[float, float, float, float]] = {}
     rows = []
     for x, y in zip(a.fillna(""), b.fillna("")):
         k = (x, y)
@@ -439,7 +425,7 @@ def fuzz_ratios_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
         if r is None:
             r = memo[k] = compute(x, y)
         rows.append(r)
-    return pd.DataFrame(rows, columns=["ratio", "partial_ratio", "wratio"])
+    return pd.DataFrame(rows, columns=["jaro", "ratio", "partial_ratio", "wratio"])
 
 
 PAIR_FEATURES = [
@@ -453,7 +439,6 @@ def pair_features(
     df: DataFrame,
     name_col: str = "preprocessed",
     gt_name_col: str = "gt_preprocessed",
-    include_jaro: bool = True,
     decimals: int | None = 6,
 ) -> DataFrame:
     """Append the f_* pair-feature columns (11-feature parity with the
@@ -463,7 +448,7 @@ def pair_features(
     def r(c: Column) -> Column:
         return F.round(c, decimals) if decimals is not None else c
 
-    out = (
+    return (
         df.withColumn("f_norm_ed", r(norm_ed(a, b)))
         .withColumn("f_token_sort", r(token_sort_ratio(a, b)))
         .withColumn("f_token_set", r(token_set_ratio(a, b)))
@@ -471,13 +456,8 @@ def pair_features(
         .withColumn("f_abbr_match", abbr_match(a, b))
         .withColumn("f_abs_len_diff", abs_len_diff(a, b))
         .withColumn("f_len_ratio", r(len_ratio(a, b)))
-    )
-    if include_jaro:
-        out = out.withColumn("f_jaro", r(jaro_winkler_udf(a, b)))
-    else:
-        out = out.withColumn("f_jaro", F.lit(0.0))
-    return (
-        out.withColumn("_fz", fuzz_ratios_udf(a, b))
+        .withColumn("_fz", string_sims_udf(a, b))
+        .withColumn("f_jaro", r(F.col("_fz.jaro")))
         .withColumn("f_ratio", r(F.col("_fz.ratio")))
         .withColumn("f_partial_ratio", r(F.col("_fz.partial_ratio")))
         .withColumn("f_wratio", r(F.col("_fz.wratio")))
@@ -505,112 +485,45 @@ def _vocab_tokens(c: Column) -> Column:
     return F.array_distinct(F.regexp_extract_all(F.lower(c), F.lit(_VOCAB_TOKEN_RE), 0))
 
 
-class Vocabulary:
-    """Word-frequency tiers (ref features_vocabulary.py:30-99).
-
-    very_common: tokens appearing in >= very_common_min_df of distinct names;
-    common: >= common_min_df, minus very_common (disjoint tiers, as the
-    reference subtracts).  :meth:`fit_tiers` computes them distributed as
-    a ``(token, tier)`` DataFrame; an instance holds them as literal token
-    lists for :func:`vocabulary_features` (saved supervised models load
-    through it).
+def fit_vocab_tiers(
+    df: DataFrame,
+    columns: list[str],
+    very_common_min_df: float = 0.01,
+    common_min_df: float = 0.0001,
+) -> DataFrame:
+    """Word-frequency tiers (ref features_vocabulary.py:30-99) as a
+    DataFrame ``(token, tier)``: tier 2 = very_common, tokens appearing in
+    >= ``very_common_min_df`` of the distinct names; tier 1 = common,
+    >= ``common_min_df`` and not very_common (disjoint tiers, as the
+    reference subtracts).  NO token list is ever collected to the driver
+    (only the scalar distinct-name count).  Feed it to
+    :func:`vocabulary_features`, which joins it instead of inlining
+    literal arrays — the 100 TB path when a small ``common_min_df`` makes
+    the tier lists millions of tokens.
     """
-
-    def __init__(self, very_common: list[str], common: list[str]):
-        self.very_common = sorted(very_common)
-        self.common = sorted(common)
-
-    @classmethod
-    def fit_tiers(
-        cls,
-        df: DataFrame,
-        columns: list[str],
-        very_common_min_df: float = 0.01,
-        common_min_df: float = 0.0001,
-    ) -> DataFrame:
-        """The tier table as a DataFrame ``(token, tier)`` with tier 2 =
-        very_common, 1 = common — NO token list is ever collected to the
-        driver (only the scalar distinct-name count).  Feed it to
-        :func:`vocabulary_features_joined`, which broadcast-joins it
-        instead of inlining literal arrays — the 100 TB path when a small
-        ``common_min_df`` makes the tier lists millions of tokens.
-        """
-        if common_min_df >= very_common_min_df:
-            raise ValueError("common_min_df must be smaller than very_common_min_df")
-        names = None
-        for c in columns:
-            part = df.select(F.col(c).alias("_n"))
-            names = part if names is None else names.unionAll(part)
-        names = names.filter(F.col("_n").isNotNull()).distinct()
-        n_docs = names.count()
-        tok_df = (
-            names.select(F.explode_outer(_vocab_tokens(F.col("_n"))).alias("token"))
-            .filter(F.col("token").isNotNull())
-            .groupBy("token")
-            .agg(F.count("*").alias("df"))
-        )
-        return tok_df.filter(F.col("df") >= common_min_df * n_docs).select(
-            "token",
-            F.when(F.col("df") >= very_common_min_df * n_docs, F.lit(2))
-            .otherwise(F.lit(1))
-            .alias("tier"),
-        )
+    if common_min_df >= very_common_min_df:
+        raise ValueError("common_min_df must be smaller than very_common_min_df")
+    names = None
+    for c in columns:
+        part = df.select(F.col(c).alias("_n"))
+        names = part if names is None else names.unionAll(part)
+    names = names.filter(F.col("_n").isNotNull()).distinct()
+    n_docs = names.count()
+    tok_df = (
+        names.select(F.explode_outer(_vocab_tokens(F.col("_n"))).alias("token"))
+        .filter(F.col("token").isNotNull())
+        .groupBy("token")
+        .agg(F.count("*").alias("df"))
+    )
+    return tok_df.filter(F.col("df") >= common_min_df * n_docs).select(
+        "token",
+        F.when(F.col("df") >= very_common_min_df * n_docs, F.lit(2))
+        .otherwise(F.lit(1))
+        .alias("tier"),
+    )
 
 
 def vocabulary_features(
-    df: DataFrame,
-    vocab: Vocabulary,
-    name_col: str = "preprocessed",
-    gt_name_col: str = "gt_preprocessed",
-    decimals: int | None = 6,
-) -> DataFrame:
-    """Append the 9 vocabulary hit/miss features — all native array ops.
-
-    hits = tokens present in both names; misses = symmetric difference;
-    each split into very-common / common / rare by fitted tier membership
-    (array_intersect against the literal tier arrays; tiers are disjoint so
-    rare = total - very_common - common).  For extremely large vocabularies
-    prefer a token-level broadcast join; literal arrays are right-sized here
-    because tier size is bounded by 1/min_df names.
-    """
-    s1 = _vocab_tokens(F.col(name_col))
-    s2 = _vocab_tokens(F.col(gt_name_col))
-    out = (
-        df.withColumn("_hits", F.array_intersect(s1, s2))
-        .withColumn("_misses", F.array_except(F.array_union(s1, s2), F.array_intersect(s1, s2)))
-        .withColumn("_n1", F.size(s1))
-        .withColumn("_n2", F.size(s2))
-    )
-    vc = F.lit(vocab.very_common) if vocab.very_common else F.array().cast("array<string>")
-    cm = F.lit(vocab.common) if vocab.common else F.array().cast("array<string>")
-
-    def tier_counts(col: str, pref: str) -> list:
-        n_vc = F.size(F.array_intersect(F.col(col), vc))
-        n_cm = F.size(F.array_intersect(F.col(col), cm))
-        return [
-            n_vc.cast("double").alias(f"f_very_common_{pref}"),
-            n_cm.cast("double").alias(f"f_common_{pref}"),
-            (F.size(F.col(col)) - n_vc - n_cm).cast("double").alias(f"f_rare_{pref}"),
-        ]
-
-    n_hits = F.size(F.col("_hits"))
-    n_total = n_hits + F.size(F.col("_misses"))
-    ratio = F.when(n_total == 0, F.lit(None).cast("double")).otherwise(
-        n_hits / n_total.cast("double")
-    )
-    if decimals is not None:
-        ratio = F.round(ratio, decimals)
-    return out.select(
-        "*",
-        *tier_counts("_hits", "hit"),
-        *tier_counts("_misses", "miss"),
-        n_hits.cast("double").alias("f_n_overlap_words"),
-        ratio.alias("f_ratio_overlap_words"),
-        F.abs(F.col("_n1") - F.col("_n2")).cast("double").alias("f_num_word_difference"),
-    ).drop("_hits", "_misses", "_n1", "_n2")
-
-
-def vocabulary_features_joined(
     df: DataFrame,
     tiers: DataFrame,
     row_keys: list[str],
@@ -619,19 +532,20 @@ def vocabulary_features_joined(
     decimals: int | None = 6,
     broadcast_tiers: bool = True,
 ) -> DataFrame:
-    """Same 9 vocabulary features as :func:`vocabulary_features`, but the
+    """Append the 9 vocabulary hit/miss features.
+
+    hits = tokens present in both names; misses = symmetric difference;
+    each split into very-common / common / rare by tier membership.  The
     tier lookup is a JOIN on the ``(token, tier)`` table from
-    :meth:`Vocabulary.fit_tiers` instead of literal in-plan arrays, so the
+    :func:`fit_vocab_tiers` instead of literal in-plan arrays, so the
     PLAN size is independent of vocabulary size (a literal tier array with
     millions of tokens bloats every serialized task).
 
     Shape: hits/misses and the three overlap features stay native array
     expressions on the input rows; only the six tier counts go through
     explode -> tier join -> conditional-sum aggregation on ``row_keys`` ->
-    one join back.  Costs one extra shuffle pair on ``row_keys`` versus
-    the literal variant, in exchange for the plan-size independence — the
-    right trade at 100 TB where a min_df of 1e-4 can mean millions of
-    tier tokens.
+    one join back — one shuffle pair on ``row_keys``, the right trade at
+    100 TB where a min_df of 1e-4 can mean millions of tier tokens.
 
     ``broadcast_tiers=True`` (default) hints a broadcast hash join —
     note this still materializes the tier table once on the driver inside
@@ -642,8 +556,7 @@ def vocabulary_features_joined(
     ``row_keys`` must uniquely identify input rows (e.g. ``[uid, gt_uid]``
     for candidate pairs); the count-rejoin is NULL-SAFE on these keys, so
     no-candidate rows with a NULL ``gt_uid`` survive.  Rows whose token
-    arrays are NULL (null names) get NULL tier counts, matching the
-    literal variant's ``size(null)`` semantics.
+    arrays are NULL (null names) get NULL tier counts.
     """
     s1 = _vocab_tokens(F.col(name_col))
     s2 = _vocab_tokens(F.col(gt_name_col))

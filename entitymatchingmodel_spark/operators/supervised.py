@@ -23,13 +23,12 @@ from entitymatchingmodel_spark.operators.features import (
     PAIR_FEATURES,
     RANK_FEATURES,
     VOCAB_FEATURES,
-    Vocabulary,
     extra_equality_feature,
+    fit_vocab_tiers,
     lef_features,
     pair_features,
     rank_features,
     vocabulary_features,
-    vocabulary_features_joined,
 )
 
 
@@ -55,24 +54,19 @@ class SupervisedModel:
         ml_model,
         feature_cols: list[str],
         score_col_in: str,
-        vocabulary: Vocabulary | None = None,
         vocab_tiers: DataFrame | None = None,
         row_keys: tuple[str, ...] = ("uid", "gt_uid"),
         extra_cols: tuple[str, ...] = (),
         use_lef: bool = False,
     ):
         """``vocab_tiers`` (a ``(token, tier)`` DataFrame from
-        :meth:`Vocabulary.fit_tiers`) is the scale path for vocabulary
-        features — the tier table stays distributed and is joined, never
-        inlined as a literal array; ``vocabulary`` (collected tier lists)
-        remains supported for models loaded from old saves.  At most one
-        of the two should be set; ``vocab_tiers`` wins if both are.
-        ``row_keys`` must uniquely identify candidate rows (used to join
-        the tier counts back)."""
+        :func:`fit_vocab_tiers`) turns on the vocabulary features — the
+        tier table stays distributed and is joined, never inlined as a
+        literal array.  ``row_keys`` must uniquely identify candidate rows
+        (used to join the tier counts back)."""
         self.ml_model = ml_model
         self.feature_cols = feature_cols
         self.score_col_in = score_col_in
-        self.vocabulary = vocabulary
         self.vocab_tiers = vocab_tiers
         self.row_keys = tuple(row_keys)
         self.extra_cols = tuple(extra_cols)
@@ -82,9 +76,7 @@ class SupervisedModel:
         out = pair_features(cands)
         out = rank_features(out, self.score_col_in)
         if self.vocab_tiers is not None:
-            out = vocabulary_features_joined(out, self.vocab_tiers, list(self.row_keys))
-        elif self.vocabulary is not None:
-            out = vocabulary_features(out, self.vocabulary)
+            out = vocabulary_features(out, self.vocab_tiers, list(self.row_keys))
         for c in self.extra_cols:
             out = extra_equality_feature(out, c)
         if self.use_lef:
@@ -125,7 +117,7 @@ class SupervisedModel:
 
     def unpersist_vocab_tiers(self) -> None:
         """Release the cached tier table a tiers-based fit handed over;
-        no-op for literal-vocabulary or vocabulary-less models."""
+        no-op for vocabulary-less models."""
         if self.vocab_tiers is not None:
             self.vocab_tiers.unpersist()
 
@@ -185,7 +177,7 @@ class SupervisedScorer:
             # token list ever reaches the driver here.  The tiers cache is
             # handed to the model, which re-joins it on every transform;
             # call model.unpersist_vocab_tiers() when done scoring.
-            tiers = Vocabulary.fit_tiers(
+            tiers = fit_vocab_tiers(
                 cands,
                 ["preprocessed", "gt_preprocessed"],
                 very_common_min_df=self.vocabulary_min_df[0],

@@ -215,11 +215,6 @@ def save_model(em: SparkEntityMatching, path: str,
             {
                 "feature_cols": sm.feature_cols,
                 "score_col_in": sm.score_col_in,
-                "vocabulary": (
-                    {"very_common": sm.vocabulary.very_common, "common": sm.vocabulary.common}
-                    if sm.vocabulary is not None
-                    else None
-                ),
                 "vocab_tiers": sm.vocab_tiers is not None,
                 "row_keys": list(sm.row_keys),
                 "extra_cols": list(sm.extra_cols),
@@ -356,21 +351,25 @@ def load_model(spark: SparkSession, path: str) -> SparkEntityMatching:
     def _load_sm(base: str):
         from pyspark.ml.classification import GBTClassificationModel
 
-        from entitymatchingmodel_spark.operators.features import Vocabulary
         from entitymatchingmodel_spark.operators.supervised import SupervisedModel
 
         smeta = _read_json(spark, f"{base}/meta.json")
         v = smeta.get("vocabulary")
-        tiers = (
-            spark.read.parquet(f"{base}/vocab_tiers").persist()
-            if smeta.get("vocab_tiers")
-            else None
-        )
+        tiers = None
+        if smeta.get("vocab_tiers"):
+            tiers = spark.read.parquet(f"{base}/vocab_tiers").persist()
+        elif v:
+            # older saves hold the tiers as literal lists in meta.json;
+            # rebuild the (token, tier) table they stand for
+            tier_of = {t: 1 for t in v["common"]}
+            tier_of.update({t: 2 for t in v["very_common"]})
+            tiers = spark.createDataFrame(
+                sorted(tier_of.items()), "token string, tier int"
+            )
         return SupervisedModel(
             GBTClassificationModel.load(f"{base}/gbt"),
             smeta["feature_cols"],
             smeta["score_col_in"],
-            vocabulary=Vocabulary(v["very_common"], v["common"]) if v else None,
             vocab_tiers=tiers,
             row_keys=tuple(smeta.get("row_keys", ("uid", "gt_uid"))),
             extra_cols=tuple(smeta.get("extra_cols", ())),

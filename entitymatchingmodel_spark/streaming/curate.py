@@ -4,15 +4,16 @@ A 100 TB/day document firehose wants its cheap filters applied ON INGEST —
 before anything is persisted — and its dedup state bounded.  This composes
 the batch curation primitives into their streaming shape:
 
-1. language filter  — :func:`functions.text.lang_id_chargram`, a pure
+1. quality filter   — :func:`functions.text.quality_score`, a pure
    projection (stateless, append-safe);
-2. quality filter   — :func:`functions.text.quality_score`, same;
-3. exact dedup      — :func:`drop_exact_duplicates_stream`
+2. exact dedup      — :func:`drop_exact_duplicates_stream`
    (``dropDuplicatesWithinWatermark``: one state row per content hash
-   inside the late-data horizon, evicted behind the watermark).
+   inside the late-data horizon, evicted behind the watermark);
+3. language filter  — :func:`functions.text.lang_id_kernel`, a stateless
+   Arrow-batched projection over the deduped survivors.
 
-Only step 3 carries state, and it is watermark-bounded; steps 1-2 are
-projections Catalyst fuses into the scan.  Heavy dedup (MinHash fuzzy,
+Only step 2 carries state, and it is watermark-bounded; steps 1 and 3
+are stateless projections.  Heavy dedup (MinHash fuzzy,
 semantic) stays a periodic BATCH job over the ingested data — its
 corpus-wide aggregations have no bounded-state streaming form, which is
 why public pipelines run ingestion filters online and fuzzy dedup offline.
@@ -47,7 +48,6 @@ def curate_stream(
     rw_clean: bool = False,
     rw_max_upper_frac: "float | None" = None,
     rw_max_removed_frac: "float | None" = None,
-    lang_scorer: str = "kernel",
 ) -> DataFrame:
     """Quality filter -> watermark-bounded exact dedup -> language filter
     over a streaming document frame; with ``url_col`` set, a URL-dedup
@@ -119,28 +119,12 @@ def curate_stream(
     skipped).  Two stateful stages in one query is the post-Spark-3.4
     multi-stateful-operator shape; both are watermark-bounded.
 
-    ``lang_scorer`` picks the trigram scorer SHAPE (pinned exactly equal
-    — see functions/text.py's data-driven-scorer section):
-
-    * ``"kernel"`` (default): the Arrow-batched numpy kernel
-      (:func:`functions.text.lang_scores_kernel`) — a stateless
-      projection (append-safe) scored AFTER the content dedup, so only
-      surviving representatives pay it.  Its ArrowEvalPython node is a
-      codegen boundary: the literal expression, fused with the other
-      screens into the stream stage's single processNext method, blew
-      janino's 64KB limit and silently dropped the whole ingest map
-      stage to interpreted eval (the r10 judge finding this fixes).
-    * ``"expr"``: the literal whole-stage-codegen expression (pre-r11
-      default) — generated-code size grows with the profile count.
-    * ``"join"`` (batch only) raises: its per-doc aggregation has no
-      append-mode streaming form; use :func:`operators.curation.
-      curate_batch` for the broadcast-join shape.
+    The language filter is the Arrow-batched char-trigram kernel
+    (:func:`functions.text.lang_id_kernel`): a stateless projection
+    (append-safe) scored AFTER the content dedup, so only surviving
+    representatives pay it, and its ArrowEvalPython node is a codegen
+    boundary for the JVM screens around it.
     """
-    if lang_scorer not in ("kernel", "expr"):
-        raise ValueError(
-            "streaming lang_scorer must be 'kernel' or 'expr' (the 'join' "
-            f"shape aggregates, illegal in append mode); got {lang_scorer!r}"
-        )
     if (lm_model is None) != (max_perplexity is None):
         raise ValueError("lm_model and max_perplexity must be set together")
     if (dsir_ratios is None) != (min_dsir is None):
@@ -154,22 +138,18 @@ def curate_stream(
 
         stream = drop_url_duplicates_stream(stream, url_col, ts_col, watermark)
     from entitymatchingmodel_spark.functions.text import (
-        _chargram_norm,
-        _score_from_norm,
+        lang_id_kernel,
         quality_score,
     )
 
     # stage-order economics (r9): the cheap per-page screens (quality, C4,
     # badwords) run FIRST, content dedup next, and the EXPENSIVE scorers
-    # (the ~600-replace trigram lang scorer, the LM and DSIR gates) run
-    # only on the deduped survivors.  This is semantically identical to
-    # scoring before dedup — all three scorers normalize case and edge
-    # whitespace exactly like the content hash does, so every member of a
-    # duplicate group scores the same — and strictly cheaper: each unique
-    # content is scored once, and Catalyst's filter pushdown (which
-    # substitutes a derived column's defining expression into the pushed
-    # predicate, re-evaluating it) re-runs the scorer over the small
-    # deduped frame instead of the raw firehose.
+    # (the trigram lang kernel, the LM and DSIR gates) run only on the
+    # deduped survivors.  This is semantically identical to scoring before
+    # dedup — all three scorers normalize case and edge whitespace exactly
+    # like the content hash does, so every member of a duplicate group
+    # scores the same — and strictly cheaper: each unique content is
+    # scored once.
     s = stream.withColumn("quality", quality_score(F.col(text_col))).filter(
         F.col("quality") >= min_quality
     )
@@ -223,38 +203,14 @@ def curate_stream(
         # stateless projection (append-safe), zero joins/shuffles
         toks = word_tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         s = s.filter(F.size(F.filter(toks, lambda t: t.isin(*bad))) == 0)
-    if lang_scorer == "expr":
-        # the literal scorer is PROJECTED here (once — the projected
-        # normalizer keeps the per-language replace() counts in flat
-        # whole-stage-codegen expressions, the lang_id_table shape) but
-        # FILTERED only after the stateful dedup below: the state boundary
-        # blocks predicate pushdown, so Catalyst cannot substitute the
-        # ~600-replace scorer into the filter predicate (an adjacent
-        # project+filter pair re-evaluates it per pushed reference, and
-        # the duplicated expression blows janino's 64KB method limit — the
-        # whole stage then runs interpreted).  The projection is
-        # stateless, so it stays append-safe.  NOTE: even this single
-        # projection, fused with the quality screen into the stream
-        # stage's processNext, exceeds 64KB at 33 profiles — which is why
-        # "expr" is no longer the default.
-        s = s.withColumn("_lang_norm", _chargram_norm(F.col(text_col)))
-        s = s.withColumn(
-            "lang", _score_from_norm(F.col("_lang_norm"))["lang"]
-        ).drop("_lang_norm")
     # when the URL stage ran, it already set the watermark — redefining it
     # downstream of a stateful operator is disallowed
     s = drop_exact_duplicates_stream(
         s, text_col, ts_col, watermark, set_watermark=url_col is None
     )
-    if lang_scorer == "kernel":
-        # scored AFTER the dedup state op — only surviving representatives
-        # pay the kernel (result-identical: it normalizes case/edge
-        # whitespace exactly like the content hash, so every member of a
-        # duplicate group scores the same); stateless Arrow projection,
-        # append-safe, own-stage codegen boundary
-        from entitymatchingmodel_spark.functions.text import lang_id_kernel
-
-        s = s.withColumn("lang", lang_id_kernel(F.col(text_col)))
+    # stateless Arrow projection after the dedup state op: append-safe,
+    # and only surviving representatives pay the kernel
+    s = s.withColumn("lang", lang_id_kernel(F.col(text_col)))
     if langs:
         s = s.filter(F.col("lang").isin(*langs))
     if lm_model is not None:

@@ -230,44 +230,6 @@ def test_curate_rw_stage_validation(spark):
                      rw_max_upper_frac=2.0)
 
 
-def test_curate_batch_lang_scorer_shapes_agree(spark):
-    """The three lang_scorer shapes ('kernel' default / 'expr' / 'join')
-    must produce identical surviving rows and identical audit columns —
-    the scorer shape is an EXECUTION choice (r11 codegen fix), never a
-    semantic one."""
-    from entitymatchingmodel_spark.operators.curation import curate_batch
-
-    df = _docs(spark)
-
-    def run(shape):
-        out = curate_batch(df, "doc_id", "text", lang_scorer=shape, **CFG)
-        return {r["doc_id"]: (r["lang"], r["quality"], r["content_hash"])
-                for r in out.collect()}
-
-    kernel, expr, join = run("kernel"), run("expr"), run("join")
-    assert kernel == expr == join
-    assert kernel, "the fixture must keep at least one row"
-    with pytest.raises(ValueError, match="lang_scorer"):
-        curate_batch(df, "doc_id", "text", lang_scorer="nope", **CFG)
-
-
-def test_curate_stream_lang_scorer_validation(spark):
-    """'join' aggregates (illegal in append mode) — the stream front-door
-    must reject it with a pointer to the batch twin."""
-    import pyspark.sql.functions as F
-
-    from entitymatchingmodel_spark.streaming import curate_stream
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(F.col("value").alias("doc_id"),
-                F.lit("x").alias("text"),
-                F.col("timestamp").alias("ts"))
-    )
-    with pytest.raises(ValueError, match="append mode"):
-        curate_stream(stream, "text", "ts", lang_scorer="join")
-
-
 def test_curation_temp_column_collision_guards(spark):
     """A caller's own '_c4_kept' / '_rw_kept' column must fail fast, not
     be silently overwritten and dropped (the _emm_ch guard convention)."""

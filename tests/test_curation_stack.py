@@ -50,12 +50,8 @@ def _run_stack(spark):
     # no reliance on a pre-supplied lang column; the synthetic corpus is
     # English-shaped so detected langs concentrate on en/und and the mix
     # keeps whatever detected groups exist.  The detect stage composes
-    # via the KERNEL scorer shape (pinned byte-equal to the literal
-    # expression): the literal shape's expression tree serializes to
-    # ~2.5 MiB at 42 profiles and a deep pipeline lineage multiplies it
-    # into ~50 MiB task binaries — measured OOMing this suite's 8g
-    # driver at the r11 dictionary growth (see lang_scores_chargram's
-    # docstring; the kernel/join shapes are size-constant by design)
+    # via the KERNEL scorer, whose plan size is constant in the profile
+    # dictionary (see functions/text.py's data-driven-shapes section)
     detected = docs.withColumn("det_lang", lang_id_kernel(F.col("text")))
     det_groups = [r["g"] for r in
                   detected.select(F.col("det_lang").alias("g")).distinct().collect()]

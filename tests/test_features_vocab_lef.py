@@ -1,23 +1,53 @@
 """Vocabulary, extra-equality, and LEF features (SURVEY §2.10 M2-M4)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from entitymatchingmodel_spark.operators.features import (
-    Vocabulary,
+    VOCAB_FEATURES,
     extra_equality_feature,
+    fit_vocab_tiers,
     lef_features,
     vocabulary_features,
 )
 
 
-def _literal_vocab(tiers):
-    """The literal-array Vocabulary holding a fit_tiers table's tiers."""
-    rows = tiers.collect()
-    return Vocabulary(
-        very_common=[r["token"] for r in rows if r["tier"] == 2],
-        common=[r["token"] for r in rows if r["tier"] == 1],
-    )
+def _tier_dict(tiers):
+    """A (token, tier) table as a plain dict token -> tier."""
+    return {r["token"]: r["tier"] for r in tiers.collect()}
+
+
+def _vocab_twin(n1, n2, tier_of):
+    """Plain-Python twin of the 9 vocabulary features over token sets and
+    a tier dict: hits = shared tokens, misses = symmetric difference, each
+    split very-common (tier 2) / common (tier 1) / rare (no tier).  A NULL
+    name makes every feature NULL."""
+    if n1 is None or n2 is None:
+        return dict.fromkeys(VOCAB_FEATURES)
+    s1, s2 = (set(re.findall(r"[a-z0-9_]{2,}", n.lower())) for n in (n1, n2))
+    hits, misses = s1 & s2, s1 ^ s2
+    out = {}
+    for toks, pref in ((hits, "hit"), (misses, "miss")):
+        vc = sum(tier_of.get(t) == 2 for t in toks)
+        cm = sum(tier_of.get(t) == 1 for t in toks)
+        out[f"f_very_common_{pref}"] = float(vc)
+        out[f"f_common_{pref}"] = float(cm)
+        out[f"f_rare_{pref}"] = float(len(toks) - vc - cm)
+    total = len(hits) + len(misses)
+    out["f_n_overlap_words"] = float(len(hits))
+    out["f_ratio_overlap_words"] = round(len(hits) / total, 6) if total else None
+    out["f_num_word_difference"] = float(abs(len(s1) - len(s2)))
+    return out
+
+
+def _assert_twin_rows(rows, pairs, tier_of, key="uid"):
+    """Every pair row's features equal the twin's, feature for feature."""
+    for p in pairs.collect():
+        want = _vocab_twin(p["preprocessed"], p["gt_preprocessed"], tier_of)
+        for c in VOCAB_FEATURES:
+            assert rows[p[key]][c] == want[c], (p[key], c, rows[p[key]][c], want[c])
 
 
 def test_vocabulary_fit_tiers(spark):
@@ -26,21 +56,19 @@ def test_vocabulary_fit_tiers(spark):
         [("alpha beta one",), ("alpha beta two",), ("alpha three",), ("alpha four",)],
         "preprocessed string",
     )
-    tiers = Vocabulary.fit_tiers(
+    tiers = fit_vocab_tiers(
         df, ["preprocessed"], very_common_min_df=0.9, common_min_df=0.4
     )
-    v = _literal_vocab(tiers)
-    assert v.very_common == ["alpha"]
-    assert v.common == ["beta"]
+    assert _tier_dict(tiers) == {"alpha": 2, "beta": 1}
 
 
 def test_vocabulary_features_values(spark):
-    v = Vocabulary(very_common=["alpha"], common=["beta"])
+    tiers = spark.createDataFrame([("alpha", 2), ("beta", 1)], "token string, tier int")
     df = spark.createDataFrame(
-        [("alpha beta corp", "alpha gamma corp")],
-        "preprocessed string, gt_preprocessed string",
+        [(1, 10, "alpha beta corp", "alpha gamma corp")],
+        "uid long, gt_uid long, preprocessed string, gt_preprocessed string",
     )
-    row = vocabulary_features(df, v).collect()[0]
+    row = vocabulary_features(df, tiers, ["uid", "gt_uid"]).collect()[0]
     # hits: alpha(very), corp(rare); misses: beta(common), gamma(rare)
     assert row["f_very_common_hit"] == 1.0
     assert row["f_common_hit"] == 0.0
@@ -56,7 +84,7 @@ def test_vocabulary_features_values(spark):
 def test_vocabulary_min_df_validation(spark):
     df = spark.createDataFrame([("x",)], "preprocessed string")
     with pytest.raises(ValueError, match="smaller"):
-        Vocabulary.fit_tiers(df, ["preprocessed"], very_common_min_df=0.01, common_min_df=0.1)
+        fit_vocab_tiers(df, ["preprocessed"], very_common_min_df=0.01, common_min_df=0.1)
 
 
 def test_extra_equality_three_states(spark):
@@ -126,12 +154,9 @@ def test_business_type_tiers(spark, n1, n2, bt_cat, monkeypatch):
 
 
 def test_vocabulary_joined_matches_literal_path(spark):
-    """The broadcast-join tier path must produce exactly the literal-array
-    path's features, with no collect and a pinned broadcast join."""
-    from entitymatchingmodel_spark.operators.features import (
-        VOCAB_FEATURES,
-        vocabulary_features_joined,
-    )
+    """The broadcast-join tier path must produce exactly the features a
+    literal tier dict gives (the plain-Python twin), with no collect and
+    a pinned broadcast join."""
     from entitymatchingmodel_spark.plans import explain_str
 
     names = spark.createDataFrame(
@@ -144,20 +169,15 @@ def test_vocabulary_joined_matches_literal_path(spark):
          (3, 30, "", "alpha four")],
         "uid long, gt_uid long, preprocessed string, gt_preprocessed string",
     )
-    tiers = Vocabulary.fit_tiers(names, ["preprocessed"],
-                                 very_common_min_df=0.9, common_min_df=0.4)
-    v = _literal_vocab(tiers)
-    assert {(r["token"], r["tier"]) for r in tiers.collect()} == {("alpha", 2), ("beta", 1)}
+    tiers = fit_vocab_tiers(names, ["preprocessed"],
+                            very_common_min_df=0.9, common_min_df=0.4)
+    tier_of = _tier_dict(tiers)
+    assert tier_of == {"alpha": 2, "beta": 1}
 
-    lit_rows = {
-        r["uid"]: tuple(r[c] for c in VOCAB_FEATURES)
-        for r in vocabulary_features(pairs, v).collect()
-    }
-    out = vocabulary_features_joined(pairs, tiers, ["uid", "gt_uid"])
-    join_rows = {
-        r["uid"]: tuple(r[c] for c in VOCAB_FEATURES) for r in out.collect()
-    }
-    assert join_rows == lit_rows
+    out = vocabulary_features(pairs, tiers, ["uid", "gt_uid"])
+    join_rows = {r["uid"]: r for r in out.collect()}
+    assert set(join_rows) == {1, 2, 3}
+    _assert_twin_rows(join_rows, pairs, tier_of)
     plan = explain_str(out)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
@@ -198,14 +218,10 @@ def test_lef_r4_term_breadth(spark, name, lef):
     assert df.select(extract_lef(F.col("n")).alias("l")).collect()[0]["l"] == lef
 
 
-def test_vocabulary_features_joined_null_safe_matches_literal(spark):
-    """The joined tier variant must (a) keep rows whose row key is NULL —
-    no-candidate rows with NULL gt_uid — and (b) agree with the literal
-    variant feature-for-feature, including the NULL-name rows."""
-    from entitymatchingmodel_spark.operators.features import (
-        VOCAB_FEATURES,
-        vocabulary_features_joined,
-    )
+def test_vocabulary_features_null_safe_matches_twin(spark):
+    """The tier-join features must (a) keep rows whose row key is NULL —
+    no-candidate rows with NULL gt_uid — and (b) agree with the
+    plain-Python twin feature-for-feature, including the NULL-name rows."""
 
     pairs = spark.createDataFrame(
         [
@@ -220,29 +236,25 @@ def test_vocabulary_features_joined_null_safe_matches_literal(spark):
         [("alpha beta one",), ("alpha beta two",), ("alpha three",), ("alpha four",)],
         "preprocessed string",
     )
-    tiers = Vocabulary.fit_tiers(names, ["preprocessed"],
-                                 very_common_min_df=0.9, common_min_df=0.4)
-    v = _literal_vocab(tiers)
+    tiers = fit_vocab_tiers(names, ["preprocessed"],
+                            very_common_min_df=0.9, common_min_df=0.4)
+    tier_of = _tier_dict(tiers)
 
-    lit_rows = {r["uid"]: r for r in vocabulary_features(pairs, v).collect()}
     join_rows = {r["uid"]: r
-                 for r in vocabulary_features_joined(pairs, tiers, ["uid", "gt_uid"]).collect()}
+                 for r in vocabulary_features(pairs, tiers, ["uid", "gt_uid"]).collect()}
     assert set(join_rows) == {1, 2, 3, 4}, "null-key rows must survive the rejoin"
-    for uid, lit in lit_rows.items():
-        for c in VOCAB_FEATURES:
-            assert join_rows[uid][c] == lit[c], (uid, c)
+    _assert_twin_rows(join_rows, pairs, tier_of)
     # shuffle-join fallback for tier tables too big to broadcast: same rows
-    nb = {r["uid"]: r for r in vocabulary_features_joined(
+    nb = {r["uid"]: r for r in vocabulary_features(
         pairs, tiers, ["uid", "gt_uid"], broadcast_tiers=False).collect()}
-    for uid, lit in lit_rows.items():
-        for c in VOCAB_FEATURES:
-            assert nb[uid][c] == lit[c], (uid, c)
+    assert set(nb) == {1, 2, 3, 4}
+    _assert_twin_rows(nb, pairs, tier_of)
 
 
 def test_supervised_fit_uses_no_collect_tiers(spark):
     """SupervisedScorer.fit(with_vocabulary=True) must hand the model a
     DataFrame tier table (no collected token lists) and produce the same
-    vocabulary feature values the literal path computes."""
+    vocabulary feature values the plain-Python twin computes."""
     from entitymatchingmodel_spark.operators.supervised import SupervisedScorer
 
     rows = []
@@ -263,20 +275,18 @@ def test_supervised_fit_uses_no_collect_tiers(spark):
     model = scorer.fit(cands)
     try:
         assert model.vocab_tiers is not None, "fit must keep tiers as a DataFrame"
-        assert model.vocabulary is None, "no collected tier lists in the fit path"
         out = model.transform(cands, return_sm_features=True)
         got = {(r["uid"], r["gt_uid"]): r for r in out.collect()}
 
-        v = _literal_vocab(Vocabulary.fit_tiers(
+        tier_of = _tier_dict(fit_vocab_tiers(
             cands, ["preprocessed", "gt_preprocessed"],
             very_common_min_df=0.5, common_min_df=0.01))
-        want = {(r["uid"], r["gt_uid"]): r
-                for r in vocabulary_features(cands, v).collect()}
-        from entitymatchingmodel_spark.operators.features import VOCAB_FEATURES
-        assert set(got) == set(want)
-        for k in want:
+        assert tier_of, "the fixture must put tokens in a tier"
+        assert set(got) == {(u, g) for u, g, *_ in rows}
+        for u, g, n1, n2, *_ in rows:
+            want = _vocab_twin(n1, n2, tier_of)
             for c in VOCAB_FEATURES:
-                assert got[k][c] == want[k][c], (k, c)
+                assert got[(u, g)][c] == want[c], ((u, g), c)
         assert all(r["nm_score"] is not None for r in got.values())
     finally:
         model.unpersist_vocab_tiers()

@@ -123,11 +123,68 @@ def test_vocab_tiers_model_roundtrip(spark, tmp_path):
     save_model(em, path)
     em2 = load_model(spark, path)
     assert em2.supervised_model_.vocab_tiers is not None
-    assert em2.supervised_model_.vocabulary is None
     a = _canon(em.transform(names))
     b = _canon(em2.transform(names))
     pd.testing.assert_frame_equal(a, b)
     assert len(a) > 0
+
+
+def test_literal_vocabulary_save_loads_like_tier_save(spark, tmp_path):
+    """A save whose meta.json holds the tiers as literal very_common /
+    common lists (the older format, no vocab_tiers parquet) must load and
+    transform exactly like the same model's tier-table save."""
+    import shutil
+
+    from entitymatchingmodel_spark.persistence import _read_json, _write_json
+
+    # "group" sits in most names (very common), every other token in few
+    gt = spark.createDataFrame(
+        [(1, "apple group"), (2, "netflix nv"), (3, "amazon group"),
+         (4, "spotify group")],
+        "id long, name string",
+    )
+    names = spark.createDataFrame(
+        [(11, "aple group"), (12, "netflx nv"), (13, "amazon group")],
+        "id long, name string",
+    )
+    em = SparkEntityMatching(
+        indexers=[{"type": "cosine_similarity", "tokenizer": "characters",
+                   "ngram": 2, "num_candidates": 2, "cos_sim_lower_bound": 0.1}],
+        return_sm_features=True,
+    )
+    em.fit(gt)
+    em.fit_classifier(names, max_iter=2, with_vocabulary=True,
+                      vocabulary_min_df=(0.5, 0.01))
+    tier_path = str(tmp_path / "tier_save")
+    save_model(em, tier_path)
+
+    old_path = str(tmp_path / "literal_save")
+    shutil.copytree(tier_path, old_path)
+    sm_dir = f"{old_path}/supervised"
+    tiers = spark.read.parquet(f"{sm_dir}/vocab_tiers").collect()
+    assert {r["tier"] for r in tiers} == {1, 2}, "fixture must fill both tiers"
+    meta = _read_json(spark, f"{sm_dir}/meta.json")
+    meta["vocab_tiers"] = False
+    meta["vocabulary"] = {
+        "very_common": sorted(r["token"] for r in tiers if r["tier"] == 2),
+        "common": sorted(r["token"] for r in tiers if r["tier"] == 1),
+    }
+    _write_json(spark, f"{sm_dir}/meta.json", meta)
+    shutil.rmtree(f"{sm_dir}/vocab_tiers")
+
+    models = [em, load_model(spark, tier_path), load_model(spark, old_path)]
+    try:
+        a = _canon(models[1].transform(names))
+        b = _canon(models[2].transform(names))
+    finally:
+        # release every cached frame now rather than at some later JVM GC,
+        # where it would shift other tests' persistent-RDD counts
+        for m in models:
+            m.unpersist()
+            m.supervised_model_.unpersist_vocab_tiers()
+    assert "f_very_common_hit" in a.columns
+    pd.testing.assert_frame_equal(a, b)
+    assert len(a) > 0 and a["nm_score"].notna().any()
 
 
 def test_bucketed_weights_roundtrip_plan_and_ddl_recreate(spark, fitted, names, tmp_path_factory):

@@ -143,8 +143,8 @@ def test_decontamination_broadcasts_hashed_bench_side(spark):
 
 def test_vocab_joined_tier_join_is_broadcast(spark):
     from entitymatchingmodel_spark.operators.features import (
-        Vocabulary,
-        vocabulary_features_joined,
+        fit_vocab_tiers,
+        vocabulary_features,
     )
 
     part = spark.read.parquet(f"{SF_DIR}/part.parquet")
@@ -155,16 +155,16 @@ def test_vocab_joined_tier_join_is_broadcast(spark):
         F.col("p_name").alias("preprocessed"),
         F.col("p_name").alias("gt_preprocessed"),
     )
-    tiers = Vocabulary.fit_tiers(names, ["preprocessed"],
-                                 very_common_min_df=0.05, common_min_df=0.001)
-    out = vocabulary_features_joined(pairs, tiers, ["uid", "gt_uid"])
+    tiers = fit_vocab_tiers(names, ["preprocessed"],
+                            very_common_min_df=0.05, common_min_df=0.001)
+    out = vocabulary_features(pairs, tiers, ["uid", "gt_uid"])
     assert broadcast_join_count(out) >= 1
 
 
 def test_supervised_tiers_featurize_pins_broadcast(spark):
     """The supervised fit path's vocabulary features must reach the plan as
     a broadcast tier join (no literal token arrays, no driver collect)."""
-    from entitymatchingmodel_spark.operators.features import Vocabulary
+    from entitymatchingmodel_spark.operators.features import fit_vocab_tiers
     from entitymatchingmodel_spark.operators.supervised import SupervisedModel
 
     part = spark.read.parquet(f"{SF_DIR}/part.parquet").limit(200)
@@ -175,11 +175,31 @@ def test_supervised_tiers_featurize_pins_broadcast(spark):
         F.col("p_name").alias("gt_preprocessed"),
         F.lit(0.5).alias("score_0"),
     )
-    tiers = Vocabulary.fit_tiers(cands, ["preprocessed", "gt_preprocessed"],
-                                 very_common_min_df=0.05, common_min_df=0.001)
+    tiers = fit_vocab_tiers(cands, ["preprocessed", "gt_preprocessed"],
+                            very_common_min_df=0.05, common_min_df=0.001)
     model = SupervisedModel(None, [], "score_0", vocab_tiers=tiers)
     out = model._featurize(cands)
     assert broadcast_join_count(out) >= 1
+
+
+def test_pair_features_one_python_eval(spark):
+    """All four string similarities (Jaro-Winkler and the three fuzz
+    ratios) come from one pandas UDF: the plan holds exactly one
+    ArrowEvalPython node, and that node evaluates exactly one UDF."""
+    import re
+
+    from entitymatchingmodel_spark.operators.features import pair_features
+    from entitymatchingmodel_spark.plans import explain_str
+
+    pairs = spark.createDataFrame(
+        [(1, 2, "acme holdings bv", "acme holding b v"),
+         (3, 4, "kitten", "sitting")],
+        "uid long, gt_uid long, preprocessed string, gt_preprocessed string",
+    )
+    plan = explain_str(pair_features(pairs), "simple")
+    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(.*?)\]", plan)
+    assert len(nodes) == 1, plan
+    assert len(re.findall(r"pythonUDF\d+#", nodes[0])) == 1, plan
 
 
 def test_per_group_cap_single_shuffle_sample_mix_map_only(spark):

@@ -125,9 +125,10 @@ def test_multiple_named_models(spark, gt, names):
 def _entry_module():
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_for_schema", "/root/repo/__spark_entry__.py"
-    )
+    from pathlib import Path
+
+    entry = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("spark_entry_for_schema", str(entry))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -291,7 +291,7 @@ def test_curate_stream_matches_batch_curation(spark, tmp_path):
     import os
 
     from entitymatchingmodel_spark.functions.text import (
-        lang_id_chargram,
+        lang_id_join_table,
         quality_score,
     )
     from entitymatchingmodel_spark.operators.dedup import exact_duplicates
@@ -324,8 +324,11 @@ def test_curate_stream_matches_batch_curation(spark, tmp_path):
     finally:
         q.stop()
 
+    # the batch side detects language with the pure-JVM join shape, so
+    # the stream's kernel is checked against an independent scorer
+    en_ids = lang_id_join_table(df, "doc_id", "text").filter(F.col("lang") == "en")
     batch_kept = (
-        df.filter(lang_id_chargram(F.col("text")) == "en")
+        df.join(en_ids.select("doc_id"), "doc_id")
         .filter(quality_score(F.col("text")) >= 0.2)
     )
     want_hashes = {r["content_hash"] for r in

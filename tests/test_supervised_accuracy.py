@@ -71,9 +71,10 @@ def test_supervised_quality_contract_row_thresholds(spark):
     caught the positives-only training bug (constant score, AUC 0.5)."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location(
-        "entry_quality", "/root/repo/__spark_entry__.py"
-    )
+    from pathlib import Path
+
+    entry = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("entry_quality", str(entry))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     row = mod.queries()["supervised_quality"](spark, "/root/testdata/sf0.001").head()

@@ -1,8 +1,69 @@
 """Unit tests for text-analysis functions (functions/text.py)."""
 
+import random
+import re
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
-from entitymatchingmodel_spark.functions.text import repetition_stats
+from entitymatchingmodel_spark.functions.text import (
+    CHAR_TRIGRAM_PROFILES,
+    repetition_stats,
+)
+
+
+def ref(text):
+    """Plain-Python char-trigram scorer: normalize -> overlapping trigrams
+    -> per-profile occurrence counts -> argmax with alphabetical
+    tie-break; ``('und', 0, n)`` when nothing hits, NULL counts as empty
+    text.  The semantics every package shape and the DuckDB oracle
+    share."""
+    s = " " + re.sub(r"[^a-z]+", " ", (text or "").lower()).strip() + " "
+    grams = [s[i:i + 3] for i in range(max(0, len(s) - 2))]
+    hits = {
+        lang: sum(g in set(prof) for g in grams)
+        for lang, prof in CHAR_TRIGRAM_PROFILES.items()
+    }
+    best = max(hits.values())
+    lang = "und" if best == 0 else min(l for l, h in hits.items() if h == best)
+    return (lang, best, len(grams))
+
+
+def _random_strings(seed):
+    """150 seeded adversarial strings, every third salted with profile
+    fragments so hits actually occur."""
+    rng = random.Random(seed)
+    alphabet = "abcdefghijklmnopqrstuvwxyz  .,;-0189éÄß"
+    frags = ["the", "der", "que", "van", "cao", "zio", "ing", "sch", " de"]
+    cases = []
+    for i in range(150):
+        n = rng.randint(0, 40)
+        s = "".join(rng.choice(alphabet) for _ in range(n))
+        if i % 3 == 0:
+            for _ in range(rng.randint(1, 4)):
+                p = rng.randint(0, len(s))
+                s = s[:p] + rng.choice(frags) + s[p:]
+        cases.append((i, s))
+    return cases
+
+
+def _shape_rows(df, id_col="doc_id"):
+    """(kernel, join, table) score dicts id -> (lang, hits, n_trigrams)."""
+    from entitymatchingmodel_spark.functions.text import (
+        lang_id_join_table,
+        lang_id_table,
+        lang_scores_kernel,
+    )
+
+    def rows(t):
+        return {r[id_col]: (r["lang"], r["hits"], r["n_trigrams"])
+                for r in t.collect()}
+
+    kernel = {r[id_col]: tuple(r["s"]) for r in
+              df.select(id_col, lang_scores_kernel(F.col("text")).alias("s"))
+              .collect()}
+    return (kernel, rows(lang_id_join_table(df, id_col, "text")),
+            rows(lang_id_table(df, id_col, "text")))
 
 
 def test_repetition_stats_hand_computed(spark):
@@ -42,15 +103,13 @@ def test_bpe_token_count_hand_cases(spark):
         assert r["got"] == r["expected"], r
 
 
-def test_lang_id_chargram_detects_planted_languages(spark):
+def test_lang_id_kernel_detects_planted_languages(spark):
     """Char-trigram profile scorer: correct language on short natural
-    sentences in all seven profiled languages; 'und' on empty/NULL/
+    sentences in the profiled languages; 'und' on empty/NULL/
     non-language input (NULL counts as empty text in both engines)."""
-    from pyspark.sql import functions as F
-
     from entitymatchingmodel_spark.functions.text import (
-        lang_id_chargram,
-        lang_scores_chargram,
+        lang_id_kernel,
+        lang_scores_kernel,
     )
 
     rows = [
@@ -90,25 +149,20 @@ def test_lang_id_chargram_detects_planted_languages(spark):
         (29, "Mbweha mwepesi anaruka juu ya mbwa mvivu na kukimbia katika msitu kwa sababu ya chakula cha wanyama wa pori.", "sw"),
     ]
     df = spark.createDataFrame(rows, "id long, text string, want string")
-    got = df.select("id", "want", lang_id_chargram(F.col("text")).alias("lang")).collect()
+    got = df.select("id", "want", lang_id_kernel(F.col("text")).alias("lang")).collect()
     for r in got:
         assert r["lang"] == r["want"], (r["id"], r["lang"], r["want"])
     # NULL input == empty text: identical full score struct
-    s = {r["id"]: r["s"] for r in
+    s = {r["id"]: tuple(r["s"]) for r in
          df.filter(F.col("id").isin(6, 7))
-           .select("id", lang_scores_chargram(F.col("text")).alias("s")).collect()}
+           .select("id", lang_scores_kernel(F.col("text")).alias("s")).collect()}
     assert s[6] == s[7] == ("und", 0, 0), s
 
 
-def test_lang_id_chargram_tie_breaks_alphabetically(spark):
+def test_lang_id_kernel_tie_breaks_alphabetically(spark):
     """Equal profile hits resolve to the alphabetically-first language —
-    the deterministic contract the DuckDB oracle's CASE chain mirrors."""
-    from pyspark.sql import functions as F
-
-    from entitymatchingmodel_spark.functions.text import (
-        CHAR_TRIGRAM_PROFILES,
-        lang_scores_chargram,
-    )
+    the deterministic contract the DuckDB oracle's CASE chain mirrors —
+    in the kernel and in the join shape."""
 
     # 'xde' -> trigrams ' xd', 'xde', 'de '; 'de ' is in several profiles
     # (da/es/fr/... but NOT the alphabetically-first de) and nothing else
@@ -117,58 +171,20 @@ def test_lang_id_chargram_tie_breaks_alphabetically(spark):
     assert "de " in CHAR_TRIGRAM_PROFILES["da"] and "de " in CHAR_TRIGRAM_PROFILES["es"]
     assert "de " not in CHAR_TRIGRAM_PROFILES["de"]
     assert not any("xd" in t for p in CHAR_TRIGRAM_PROFILES.values() for t in p)
-    df = spark.createDataFrame([("xde",)], "text string")
-    row = df.select(lang_scores_chargram(F.col("text")).alias("s")).head()
-    assert row["s"]["lang"] == "da" and row["s"]["hits"] == 1
+    df = spark.createDataFrame([(1, "xde")], "doc_id long, text string")
+    kernel, joined, _ = _shape_rows(df)
+    assert kernel[1] == joined[1] == ("da", 1, 3) == ref("xde")
 
 
-def test_lang_scores_chargram_matches_python_reference(spark):
+def test_lang_scores_kernel_matches_python_reference(spark):
     """One batched Spark job over 150 adversarial random strings must agree
-    exactly with a pure-Python reference of the scorer (normalize ->
-    overlapping trigrams -> per-profile occurrence counts -> argmax with
-    alphabetical tie-break) — pins the expression semantics the DuckDB
-    oracle also mirrors."""
-    import random
-    import re
-
-    from pyspark.sql import functions as F
-
-    from entitymatchingmodel_spark.functions.text import (
-        CHAR_TRIGRAM_PROFILES,
-        lang_scores_chargram,
-    )
-
-    rng = random.Random(99)
-    alphabet = "abcdefghijklmnopqrstuvwxyz  .,;-0189éÄß"
-    frags = ["the", "der", "que", "van", "cao", "zio", "ing", "sch", " de"]
-    cases = []
-    for i in range(150):
-        n = rng.randint(0, 40)
-        s = "".join(rng.choice(alphabet) for _ in range(n))
-        if i % 3 == 0:  # salt in profile fragments so hits actually occur
-            for _ in range(rng.randint(1, 4)):
-                p = rng.randint(0, len(s))
-                s = s[:p] + rng.choice(frags) + s[p:]
-        cases.append((i, s))
-
-    def ref(text):
-        s = " " + re.sub(r"[^a-z]+", " ", text.lower()).strip() + " "
-        grams = [s[i:i + 3] for i in range(max(0, len(s) - 2))]
-        hits = {
-            lang: sum(g in set(prof) for g in grams)
-            for lang, prof in CHAR_TRIGRAM_PROFILES.items()
-        }
-        best = max(hits.values())
-        lang = "und" if best == 0 else min(l for l, h in hits.items() if h == best)
-        return (lang, best, len(grams))
-
+    exactly with the pure-Python reference of the scorer — pins the
+    semantics the DuckDB oracle also mirrors."""
+    cases = _random_strings(99)
     df = spark.createDataFrame(cases, "id long, text string")
-    got = {
-        r["id"]: (r["s"]["lang"], r["s"]["hits"], r["s"]["n_trigrams"])
-        for r in df.select("id", lang_scores_chargram(F.col("text")).alias("s")).collect()
-    }
+    kernel, _, _ = _shape_rows(df, "id")
     for i, text in cases:
-        assert got[i] == ref(text), (i, text, got[i], ref(text))
+        assert kernel[i] == ref(text), (i, text, kernel[i], ref(text))
 
 
 def test_text_stats_null_and_empty_docs_no_ansi_crash(spark):
@@ -196,90 +212,70 @@ def test_text_stats_null_and_empty_docs_no_ansi_crash(spark):
 
 
 def test_lang_id_table_matches_column_api(spark):
-    """The batch-table shape (projected-norm, full codegen) must produce
-    byte-identical results to the Column-API let-binding shape — both run
-    through the shared _score_from_norm builder."""
-    from entitymatchingmodel_spark.functions.text import (
-        lang_id_table,
-        lang_scores_chargram,
-    )
-
+    """The batch-table projection must produce exactly the Column-API
+    kernel struct, and both the reference, on every corpus row."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    want = {r["doc_id"]: tuple(r["s"]) for r in
-            docs.select("doc_id", lang_scores_chargram(F.col("text")).alias("s")).collect()}
-    got = {r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"]) for r in
-           lang_id_table(docs, "doc_id", "text").collect()}
-    assert got == want and len(got) == docs.count()
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    kernel, _, table = _shape_rows(docs)
+    assert table == kernel and len(table) == len(texts)
+    assert table == {i: ref(t) for i, t in texts.items()}
 
 
-def test_lang_scorer_data_driven_shapes_match_literal(spark):
-    """The broadcast-join shape (lang_id_join_table) and the Arrow numpy
-    kernel (lang_scores_kernel) must be BYTE-EQUAL to the literal
-    expression shape (lang_id_table) on real corpus rows plus the edge
-    cases (NULL, empty, sub-trigram, space-only, accents, no-hit runs) —
-    all three share one DuckDB oracle through the driver, so any drift
-    here is a driver mismatch."""
-    from entitymatchingmodel_spark.functions.text import (
-        lang_id_join_table,
-        lang_id_table,
-        lang_scores_kernel,
-    )
-
+def _corpus_with_edges(spark):
+    """Real corpus rows plus the edge cases (NULL, empty, sub-trigram,
+    space-only, accents, digits-only, no-hit runs), and the reference
+    score of every row."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     edge = spark.createDataFrame(
         [(9000001, None), (9000002, ""), (9000003, "ab"), (9000004, "   "),
          (9000005, "ÉÀÇ --- 1234 !!!"), (9000006, "x" * 2000),
          (9000007, "the quick brown fox and the lazy dog"),
-         (9000008, "der herr der ringe ist ein gutes buch")],
+         (9000008, "der herr der ringe ist ein gutes buch"),
+         (9000009, "12345 !!!")],
         "doc_id long, text string",
     )
     df = docs.select("doc_id", "text").unionByName(edge)
-    want = {r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"])
-            for r in lang_id_table(df, "doc_id", "text").collect()}
-    joined = {r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"])
-              for r in lang_id_join_table(df, "doc_id", "text").collect()}
-    kernel = {r["doc_id"]: tuple(r["s"]) for r in
-              df.select("doc_id", lang_scores_kernel(F.col("text")).alias("s")).collect()}
-    assert joined == want
-    assert kernel == want
+    want = {r["doc_id"]: ref(r["text"]) for r in df.collect()}
     assert len(want) == df.count()
+    return df, want
 
 
-def test_lang_scorer_shapes_match_on_randomized_strings(spark):
-    """The randomized-adversarial parity sweep of
-    test_lang_scores_chargram_matches_python_reference, re-run against
-    the two r11 data-driven shapes: 150 seeded random strings (salted
-    with profile fragments so hits occur) must score identically through
-    the join shape and the kernel."""
-    import random
-
-    from entitymatchingmodel_spark.functions.text import (
-        lang_id_join_table,
-        lang_id_table,
-        lang_scores_kernel,
-    )
-
-    rng = random.Random(431)
-    alphabet = "abcdefghijklmnopqrstuvwxyz  .,;-0189éÄß"
-    frags = ["the", "der", "que", "van", "cao", "zio", "ing", "sch", " de"]
-    cases = []
-    for i in range(150):
-        n = rng.randint(0, 40)
-        s = "".join(rng.choice(alphabet) for _ in range(n))
-        if i % 3 == 0:
-            for _ in range(rng.randint(1, 4)):
-                p = rng.randint(0, len(s))
-                s = s[:p] + rng.choice(frags) + s[p:]
-        cases.append((i, s))
-    df = spark.createDataFrame(cases, "id long, text string")
-    want = {r["id"]: (r["lang"], r["hits"], r["n_trigrams"])
-            for r in lang_id_table(df, "id", "text").collect()}
-    joined = {r["id"]: (r["lang"], r["hits"], r["n_trigrams"])
-              for r in lang_id_join_table(df, "id", "text").collect()}
-    kernel = {r["id"]: tuple(r["s"]) for r in
-              df.select("id", lang_scores_kernel(F.col("text")).alias("s")).collect()}
-    assert joined == want
+def test_lang_shapes_match_reference_on_corpus(spark):
+    """The Arrow numpy kernel (lang_scores_kernel) and the broadcast-join
+    shape (lang_id_join_table) must each equal the plain-Python reference
+    on real corpus rows plus the edge cases — the lang_id contract rows
+    check both against one DuckDB oracle, so any drift here is an oracle
+    mismatch."""
+    df, want = _corpus_with_edges(spark)
+    kernel, joined, _ = _shape_rows(df)
     assert kernel == want
+    assert joined == want
+
+
+def test_lang_id_table_matches_reference_on_corpus(spark):
+    """The table projection (lang_id_table, what the lang_id contract row
+    requests) must equal the plain-Python reference on the same corpus
+    and edge rows, NULL/empty/digits-only included."""
+    from entitymatchingmodel_spark.functions.text import lang_id_table
+
+    df, want = _corpus_with_edges(spark)
+    table = {r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"])
+             for r in lang_id_table(df, "doc_id", "text").collect()}
+    assert table == want
+
+
+def test_lang_shapes_match_reference_on_randomized_strings(spark):
+    """The randomized-adversarial sweep of
+    test_lang_scores_kernel_matches_python_reference at another seed,
+    through all three shapes: 150 random strings (salted with profile
+    fragments so hits occur) must score as the reference does."""
+    cases = _random_strings(431)
+    df = spark.createDataFrame(cases, "id long, text string")
+    want = {i: ref(t) for i, t in cases}
+    kernel, joined, table = _shape_rows(df, "id")
+    assert kernel == want
+    assert joined == want
+    assert table == want
 
 
 def test_blocked_terms_literal_hand_computed(spark):
@@ -335,15 +331,9 @@ def test_lang_phrases_witness_every_profile():
     check can see it).  Pure Python (the pinned scorer mirror), no
     Spark."""
     import importlib.util
-    import re
 
-    from entitymatchingmodel_spark.functions.text import (
-        CHAR_TRIGRAM_PROFILES,
-    )
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_for_lang_test", "/root/repo/__spark_entry__.py"
-    )
+    entry = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("entry_for_lang_test", str(entry))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     pairs = mod._LANG_PHRASE_PAIRS
@@ -351,46 +341,5 @@ def test_lang_phrases_witness_every_profile():
     # one pair per profile, no orphans either way
     assert sorted(l for l, _ in pairs) == sorted(CHAR_TRIGRAM_PROFILES)
 
-    def argmax(text):
-        s = " " + re.sub(r"[^a-z]+", " ", text.lower()).strip() + " "
-        grams = [s[i:i + 3] for i in range(max(0, len(s) - 2))]
-        hits = {l: sum(g in set(p) for g in grams)
-                for l, p in CHAR_TRIGRAM_PROFILES.items()}
-        best = max(hits.values())
-        return "und" if best == 0 else min(
-            l for l, h in hits.items() if h == best)
-
-    bad = [(l, argmax(p)) for l, p in pairs if argmax(p) != l]
+    bad = [(l, ref(p)[0]) for l, p in pairs if ref(p)[0] != l]
     assert not bad, f"phrases no longer witness their profile: {bad}"
-
-
-def test_lang_id_table_kernel_scorer_matches_literal(spark):
-    """lang_id_table(scorer='kernel') (the r11 fast path the lang_id
-    contract row uses) must be row-identical to the literal expression
-    shape, and an unknown scorer must fail loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from entitymatchingmodel_spark.functions.text import lang_id_table
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .unionByName(
-            spark.createDataFrame(
-                [(90001, None), (90002, ""), (90003, "12345 !!!")],
-                "doc_id long, text string",
-            )
-        )
-    )
-    lit_rows = {
-        r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"])
-        for r in lang_id_table(docs, "doc_id", "text").collect()
-    }
-    ker_rows = {
-        r["doc_id"]: (r["lang"], r["hits"], r["n_trigrams"])
-        for r in lang_id_table(docs, "doc_id", "text", scorer="kernel").collect()
-    }
-    assert lit_rows == ker_rows
-    with pytest.raises(ValueError, match="scorer"):
-        lang_id_table(docs, "doc_id", "text", scorer="gpu")

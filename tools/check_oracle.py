@@ -9,11 +9,9 @@ Usage: python tools/check_oracle.py [SF_DIR] [name,name,...]
 
 DuckDB runs in this process with a fixed memory limit and thread cap, and
 the process's address space is capped once the Spark JVM is up: DuckDB's
-memory_limit bounds its buffer manager only, and the oracle SQL of
-curate_batch / streaming_curation allocates past it (uncapped, the process
-grew past 13 GiB).  Such a query then reports an ORACLE ERROR instead of
-exhausting the machine, and the full sf0.01 contract runs on a 4-core,
-15 GB machine.
+memory_limit bounds its buffer manager only, so an oracle statement that
+allocates past it reports an ORACLE ERROR instead of exhausting the
+machine, and the full sf0.01 contract runs on a 4-core, 15 GB machine.
 """
 
 from __future__ import annotations
